@@ -118,9 +118,7 @@ def streaming_latency(spark, seconds: int = 35,
                       rows_per_second: int = 50_000,
                       prefix: str = "stream",
                       row_bytes: int = 200,
-                      trigger_seconds: float = 1.0,
-                      low_latency: bool = False,
-                      async_progress: bool = False) -> dict:
+                      trigger_seconds: float = 1.0) -> dict:
     """Synthetic-source → full pipeline → noop sink as a real streaming
     query (the reference's BenchmarkSource → benchmark-sink harness):
     sustained rows/s + per-microbatch p50/p99 trigger latency.
@@ -143,9 +141,7 @@ def streaming_latency(spark, seconds: int = 35,
     stream = benchmark_stream(spark, rows_per_second=rows_per_second,
                               num_partitions=8, row_bytes=row_bytes)
     name = f"bench_{prefix}_{rows_per_second}"
-    spec = ConsumerSpec(name=name, sink_type="benchmark", batch_size=200,
-                        low_latency=low_latency,
-                        async_progress=async_progress)
+    spec = ConsumerSpec(name=name, sink_type="benchmark", batch_size=200)
     pipe = ConsumerPipeline(spec, state_dir=f"{tmp}/state")
     q = pipe.start_stream(stream, checkpoint_dir=f"{tmp}/ckpt",
                           trigger_seconds=trigger_seconds)
@@ -268,31 +264,16 @@ def main() -> None:
                 100.0 * (max(rates) - min(rates)) / min(rates), 1)
     except Exception:  # noqa: BLE001
         stream_stats = {}
-    # low-latency mode (r10): task-side sliced ledger + async ring at
-    # 100 ms triggers, interleaved with a sync arm at the same trigger
-    # so the delta is same-window (see docs/perf_notes_r10.md for the
-    # decomposition of the remaining floor)
+    # 100 ms triggers: the per-trigger fixed-cost floor
     try:
-        arms = {"sync": [], "lowlat": [], "async": []}
-        for _ in range(2):
-            arms["sync"].append(streaming_latency(
-                spark, seconds=15, prefix="llsync",
-                trigger_seconds=0.1))
-            arms["lowlat"].append(streaming_latency(
-                spark, seconds=15, prefix="lowlat",
-                trigger_seconds=0.1, low_latency=True))
-            # r10 verdict task #1: offset/commit logs off the trigger
-            # path (ledger slices stay the exactly-once authority)
-            arms["async"].append(streaming_latency(
-                spark, seconds=15, prefix="lasync",
-                trigger_seconds=0.1, low_latency=True,
-                async_progress=True))
-        for tag, runs2 in arms.items():
-            best = min((r for r in runs2 if r.get("stream_p50_ms", -1) > 0),
-                       key=lambda r: r["stream_p50_ms"], default=None)
-            if best:
-                stream_stats[f"stream_{tag}_100ms_p50_ms"] = best["stream_p50_ms"]
-                stream_stats[f"stream_{tag}_100ms_p99_ms"] = best["stream_p99_ms"]
+        runs2 = [streaming_latency(spark, seconds=15, prefix="llsync",
+                                   trigger_seconds=0.1)
+                 for _ in range(2)]
+        best = min((r for r in runs2 if r.get("stream_p50_ms", -1) > 0),
+                   key=lambda r: r["stream_p50_ms"], default=None)
+        if best:
+            stream_stats["stream_sync_100ms_p50_ms"] = best["stream_p50_ms"]
+            stream_stats["stream_sync_100ms_p99_ms"] = best["stream_p99_ms"]
     except Exception:  # noqa: BLE001
         pass
     # capacity probe: drive the source at 2x the reference headline to

@@ -206,29 +206,6 @@ class ConsumerSpec:
     group_cols: list[str] | None = None
     timestamp_format: str = "iso8601"
     max_payload_bytes: int | None = 5 * 1024 * 1024
-    # low-latency delivery mode (r9 verdict task #5): the idempotency
-    # ledger is co-partitioned with the group-hash layout and consulted
-    # INSIDE the deliver tasks instead of via a per-batch driver-side
-    # broadcast anti-join (measured ~550 ms of the trigger p50), and
-    # the advisory acked-ring write moves off the critical path.
-    # Exactly-once semantics are unchanged: ledger append still
-    # precedes the checkpoint ack, replay still dedups.
-    low_latency: bool = False
-    # async progress tracking (r10 verdict task #1): offset/commit log
-    # writes move OFF the trigger path (persisted every
-    # async_ckpt_interval_ms instead of per micro-batch), trading a
-    # wider restart-replay window for trigger latency.  Safe here
-    # BECAUSE the ledger is the exactly-once replay authority: its
-    # append precedes the ack, so the replayed batches a lagging
-    # offset log produces are deduped identity-by-identity (the
-    # restart/replay test runs this mode).  The engine widens the
-    # ledger trim window to cover the async replay horizon.  Uses
-    # Spark's AsyncProgressTrackingMicroBatchExecution behind its
-    # sink-support override (the stock check allowlists only the
-    # Kafka sink; foreachBatch is replay-tolerant here by the ledger
-    # argument above).
-    async_progress: bool = False
-    async_ckpt_interval_ms: int = 1000
     # creation-time backfill directive (yaml_loader.ex initial_backfill:
     # true → backfill the sink's single source table; a list of
     # {table, [sort_column, start_position]} entries → one backfill

@@ -90,84 +90,6 @@ def _write_parquet(path: str, df: pd.DataFrame) -> None:
     pq.write_table(pa.Table.from_pandas(df, preserve_index=False), path)
 
 
-# per-Python-worker incremental slice cache: {slice_dir: (identity set,
-# file names already folded in)}.  Workers are reused across
-# micro-batches, so steady-state each task reads only the files the
-# PREVIOUS batch appended instead of the whole slice.  Keeping
-# identities past the trim watermark in the cached set is harmless
-# (trimmed identities can never recur); the set is rebuilt trim-
-# filtered at each compaction so memory stays O(retention window).
-_SLICE_CACHE: dict = {}
-
-
-def _load_ledger_slice(sdir: str, trim_lsn: int,
-                       compact_files: int) -> set:
-    """Executor-side: one partition's delivered-identity set (the
-    task-local anti-join build), incrementally maintained per worker,
-    compacting the slice when its file count piles up.  Runs inside
-    the deliver task — parallel across partitions, never a driver job.
-    Tolerates concurrent compaction (missing files are skipped;
-    duplicate identities are harmless set inserts)."""
-    import pyarrow.compute as pc
-
-    files = sorted(
-        os.path.join(sdir, f) for f in os.listdir(sdir)
-        if f.endswith(".parquet"))
-    seen, folded = _SLICE_CACHE.get(sdir, (set(), set()))
-    new = [f for f in files if f not in folded]
-    tables = []
-    for f in new:
-        try:
-            tables.append(pq.read_table(f))
-        except (FileNotFoundError, OSError):
-            continue
-    if tables:
-        merged = pa.concat_tables(tables)
-        if trim_lsn > 0:
-            lsn = merged["commit_lsn"]
-            merged = merged.filter(
-                pc.or_(pc.greater_equal(lsn, trim_lsn), pc.equal(lsn, 0)))
-        pdf = merged.to_pandas()
-        seen = seen | set(zip(pdf["commit_lsn"].tolist(),
-                              pdf["commit_idx"].tolist(),
-                              pdf["idempotency_key"].tolist()))
-        folded = folded | set(new)
-    if len(files) >= compact_files:
-        # full re-read with the trim applied: compaction is also the
-        # cache's memory bound (the set is rebuilt O(window))
-        tables = []
-        for f in files:
-            try:
-                tables.append(pq.read_table(f))
-            except (FileNotFoundError, OSError):
-                continue
-        if tables:
-            merged = pa.concat_tables(tables)
-            if trim_lsn > 0:
-                lsn = merged["commit_lsn"]
-                merged = merged.filter(
-                    pc.or_(pc.greater_equal(lsn, trim_lsn),
-                           pc.equal(lsn, 0)))
-            pdf = merged.to_pandas().drop_duplicates(subset=IDENTITY)
-            tmp = os.path.join(sdir,
-                               f"compact-{uuid.uuid4().hex}.parquet.tmp")
-            pq.write_table(
-                pa.Table.from_pandas(pdf, preserve_index=False), tmp)
-            final = tmp[: -len(".tmp")]
-            os.rename(tmp, final)
-            for f in files:
-                try:
-                    os.remove(f)
-                except FileNotFoundError:
-                    pass
-            seen = set(zip(pdf["commit_lsn"].tolist(),
-                           pdf["commit_idx"].tolist(),
-                           pdf["idempotency_key"].tolist()))
-            folded = {final}
-    _SLICE_CACHE[sdir] = (seen, folded)
-    return seen
-
-
 class DeliveryEngine:
     def __init__(
         self,
@@ -188,7 +110,6 @@ class DeliveryEngine:
         ledger_trim_batches: int | None = None,
         tracer=None,
         consumer_id: str | None = None,
-        low_latency: bool = False,
     ):
         if load_shedding_policy not in ("pause_on_full", "discard_on_full"):
             raise ValueError(f"unknown load_shedding_policy {load_shedding_policy!r}")
@@ -249,15 +170,6 @@ class DeliveryEngine:
         # (trace.ex Trace.info/error at every delivery attempt)
         self.tracer = tracer
         self.consumer_id = consumer_id
-        # low-latency mode (r9 verdict task #5): ledger co-partitioned
-        # into per-delivery-partition slices, consulted inside the
-        # deliver tasks (no per-batch broadcast anti-join JOB — the
-        # measured ~550 ms p50 component); slice compaction runs inside
-        # tasks; the advisory acked-ring write is async.  Write-ahead
-        # ordering (ledger append before checkpoint ack) is unchanged.
-        self.low_latency = low_latency
-        self._slice_layout_ok = False
-        self._bg = None  # lazy single-thread executor for advisory writes
         self._lsn_maxes: list[int] = []  # per-batch max delivered commit_lsn
         self._ledger_trim_lsn = 0
         os.makedirs(self.state_dir, exist_ok=True)
@@ -330,8 +242,8 @@ class DeliveryEngine:
 
     def _spill_overflow(self, df: DataFrame, batch_id: int) -> int:
         """Append the batch's (already ledger-anti-joined) new rows to
-        the overflow spill as one parquet dir.  Batch REPLAYS (async
-        progress, crash-before-checkpoint) append a second copy of the
+        the overflow spill as one parquet dir.  Batch REPLAYS
+        (crash-before-checkpoint) append a second copy of the
         same identities — harmless: the ledger/adjacent dedup drops
         already-delivered copies at delivery time, exactly like source
         redelivery."""
@@ -387,101 +299,16 @@ class DeliveryEngine:
                 not f.startswith("_") for f in os.listdir(self.ledger_dir)):
             # explicit schema: the ledger layout is fixed (IDENTITY), and
             # schema inference costs a footer-read job per micro-batch.
-            # recursiveFileLookup covers both layouts: flat per-batch
-            # files AND low-latency per-partition slice subdirs (whose
-            # files carry an extra group_id column parquet pruning drops)
+            # recursiveFileLookup also reads ledger files that older
+            # versions wrote into subdirectories (with an extra group_id
+            # column the explicit schema drops), so they still dedupe
             return spark.read.schema(
                 "commit_lsn long, commit_idx long, idempotency_key string"
             ).option("recursiveFileLookup", "true").parquet(self.ledger_dir)
         return None
 
-    # --- low-latency slice layout (r9 verdict task #5) --------------------
-    def _slice_dir(self, pid: int) -> str:
-        return os.path.join(self.ledger_dir, f"p{pid:05d}")
-
-    @property
-    def _layout_marker(self) -> str:
-        return os.path.join(self.ledger_dir, "_layout.json")
-
-    def _ensure_slice_layout(self, spark: SparkSession) -> None:
-        """Slice files are keyed by the delivery repartition's hash
-        (pmod(murmur3(group_id), partition_count)); a partition_count
-        change invalidates the mapping, so relayout once (one bounded
-        Spark job over the trimmed window) and record the count in a
-        marker.  Flat legacy files (no group_id column) cannot be
-        sliced — they stay where they are and are anti-joined as a
-        shrinking residue until the trim watermark passes them."""
-        import json as _json
-
-        if self._slice_layout_ok:
-            return
-        os.makedirs(self.ledger_dir, exist_ok=True)
-        current = None
-        if os.path.exists(self._layout_marker):
-            with open(self._layout_marker) as f:
-                current = _json.load(f).get("partition_count")
-        if current is not None and current != self.partition_count:
-            slice_files = []
-            for d in os.listdir(self.ledger_dir):
-                full = os.path.join(self.ledger_dir, d)
-                if d.startswith("p") and os.path.isdir(full):
-                    slice_files += [os.path.join(full, f)
-                                    for f in os.listdir(full)]
-            if slice_files:
-                df = spark.read.schema(
-                    "commit_lsn long, commit_idx long, "
-                    "idempotency_key string, group_id string"
-                ).parquet(*slice_files)
-                # F.hash IS the repartition partitioner's Murmur3Hash
-                # (seed 42); pmod matches HashPartitioning
-                pdf = df.withColumn(
-                    "_pid",
-                    F.pmod(F.hash("group_id"),
-                           F.lit(self.partition_count)).cast("int")
-                ).toPandas()
-                for pid, grp in pdf.groupby("_pid"):
-                    d = self._slice_dir(int(pid))
-                    os.makedirs(d, exist_ok=True)
-                    _write_parquet(
-                        os.path.join(d, f"relayout-{uuid.uuid4().hex}.parquet"),
-                        grp.drop(columns=["_pid"]))
-                for f in slice_files:
-                    os.remove(f)
-        with open(self._layout_marker, "w") as f:
-            _json.dump({"partition_count": self.partition_count}, f)
-        self._slice_layout_ok = True
-
-    def _flat_ledger_residue(self, spark: SparkSession) -> DataFrame | None:
-        """Top-level (pre-low-latency) ledger files: bounded residue
-        anti-joined the old way until trimming retires it."""
-        if not os.path.isdir(self.ledger_dir):
-            return None
-        files = [os.path.join(self.ledger_dir, f)
-                 for f in os.listdir(self.ledger_dir)
-                 if not f.startswith(("_", "p"))
-                 and os.path.isfile(os.path.join(self.ledger_dir, f))]
-        if not files:
-            return None
-        df = spark.read.schema(
-            "commit_lsn long, commit_idx long, idempotency_key string"
-        ).parquet(*files)
-        if self._ledger_trim_lsn > 0:
-            df = df.filter((F.col("commit_lsn") >= self._ledger_trim_lsn)
-                           | (F.col("commit_lsn") == 0))
-        return df
-
-    def _bg_submit(self, fn, *args) -> None:
-        """Advisory (non-durability-bearing) writes off the trigger
-        path: single worker thread, so writes serialize in order."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if self._bg is None:
-            self._bg = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="delivery-bg")
-        self._bg.submit(fn, *args)
-
     def _ledger_for_antijoin(self, spark: SparkSession) -> DataFrame | None:
-        """The ledger slice that can still match incoming rows: under
+        """The ledger rows that can still match incoming rows: under
         trimming, only identities newer than the watermark (plus
         lsn==0 backfill-read identities, which carry no cursor and are
         never trimmed). The lsn predicate prunes parquet row groups, so
@@ -512,12 +339,6 @@ class DeliveryEngine:
             if prev is not None else ring_new
         ).tail(self.acked_ring_size)
         _write_parquet(self.acked_ring_path, ring)
-
-    def flush_background(self) -> None:
-        """Drain pending advisory writes (tests / orderly shutdown)."""
-        if self._bg is not None:
-            self._bg.shutdown(wait=True)
-            self._bg = None
 
     def _compact_ledger(self) -> None:
         """Merge small per-batch ledger files once they pile up — keeps
@@ -619,15 +440,12 @@ class DeliveryEngine:
         (tests/test_plan_quality.py::test_delivery_plan_fingerprint —
         a silent extra shuffle here would otherwise only show up as
         trigger-latency drift)."""
-        arranged = new_rows.repartition(
+        return new_rows.repartition(
             self.partition_count, "group_id"
         ).sortWithinPartitions(
             "group_id", "commit_lsn", "commit_idx", "idempotency_key",
             F.col("deliver_count").desc(),
         )
-        if self.low_latency:
-            arranged = arranged.withColumn("_pid", F.spark_partition_id())
-        return arranged
 
     # --- the foreachBatch body -------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
@@ -655,28 +473,13 @@ class DeliveryEngine:
         # existence, so ledger duplicates (task-retry double-writes) are
         # harmless — deduping them cost a full shuffle per micro-batch
         # (~0.3 s fixed at 50k rows/s, the largest addBatch overhead)
-        if self.low_latency:
-            # r9 verdict task #5: the ledger is co-partitioned with the
-            # group-hash layout and consulted INSIDE the deliver tasks
-            # (each task reads only its own slice — no per-batch
-            # broadcast-build job, measured at ~550 ms of trigger p50).
-            # Only a flat legacy residue still anti-joins here.
-            self._ensure_slice_layout(spark)
-            residue = self._flat_ledger_residue(spark)
+        ledger = self._ledger_for_antijoin(spark)
 
-            def ledger_antijoin(df: DataFrame) -> DataFrame:
-                if residue is None:
-                    return df
-                return df.join(F.broadcast(residue.select(*IDENTITY)),
-                               IDENTITY, "left_anti")
-        else:
-            ledger = self._ledger_for_antijoin(spark)
-
-            def ledger_antijoin(df: DataFrame) -> DataFrame:
-                if ledger is None:
-                    return df
-                return df.join(F.broadcast(ledger.select(*IDENTITY)),
-                               IDENTITY, "left_anti")
+        def ledger_antijoin(df: DataFrame) -> DataFrame:
+            if ledger is None:
+                return df
+            return df.join(F.broadcast(ledger.select(*IDENTITY)),
+                           IDENTITY, "left_anti")
         new_rows = ledger_antijoin(new_rows)
 
         # pending retries: due ones re-enter delivery; not-due (still
@@ -776,9 +579,6 @@ class DeliveryEngine:
         max_bytes = self.batch_bytes
         ledger_dir, fail_dir = self.ledger_dir, self.failures_dir(batch_id)
         ring_size = self.acked_ring_size
-        use_slices = self.low_latency
-        slice_trim_lsn = self._ledger_trim_lsn
-        slice_compact_files = self.ledger_compact_files
 
         def deliver(batches):
             """Executor task body: deliver the ordered partition AND do its
@@ -789,10 +589,6 @@ class DeliveryEngine:
             sink = create_sink(sink_type, sink_config)
             sink.open()
             vectorized = callable(getattr(sink, "deliver_frame", None))
-            # where _finish appends delivered identities: the flat
-            # ledger dir, or (low-latency) this task's slice dir with
-            # group_id attached (set when the first frame arrives)
-            ledger_target = {"dir": ledger_dir, "with_group": False}
             status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
                            "status", "error", "deliver_count"]
             # per-task latency histogram: {success: [bucket counts..., +Inf]}
@@ -824,12 +620,10 @@ class DeliveryEngine:
                     status_pdf["status"].isin(["failed", "blocked", "deferred"])
                 ]
                 if len(delivered):
-                    cols = IDENTITY + (
-                        ["group_id"] if ledger_target["with_group"] else [])
                     _write_parquet(
-                        os.path.join(ledger_target["dir"],
+                        os.path.join(ledger_dir,
                                      f"batch-{batch_id}-{task_tag}.parquet"),
-                        delivered[cols],
+                        delivered[IDENTITY],
                     )
                 if len(failed):
                     fail_rows = failed.merge(
@@ -867,7 +661,6 @@ class DeliveryEngine:
             # Arrow frame (duplicates are sort-adjacent, so any dup that
             # straddles a frame boundary equals the previous tail)
             prev_tail = None
-            slice_seen = None
             # cross-frame GROUP-BLOCKING carry (r11): a group whose
             # chunk failed earlier in this task must stay blocked for
             # the rest of the task — frames are an Arrow transport
@@ -877,33 +670,6 @@ class DeliveryEngine:
             # chaos sweep under a 10-row maxRecordsPerBatch).
             failed_groups: set = set()
             for pdf in batches:
-                if use_slices and len(pdf):
-                    if slice_seen is None:
-                        # task-local ledger slice: this partition's
-                        # delivered identities (write-ahead state
-                        # co-partitioned with the group-hash layout)
-                        pid = int(pdf["_pid"].iloc[0])
-                        sdir = os.path.join(ledger_dir, f"p{pid:05d}")
-                        os.makedirs(sdir, exist_ok=True)
-                        ledger_target["dir"] = sdir
-                        ledger_target["with_group"] = True
-                        slice_seen = _load_ledger_slice(
-                            sdir, slice_trim_lsn, slice_compact_files)
-                    if slice_seen:
-                        # plain zip-membership against the python set:
-                        # 0.6 µs/row vs MultiIndex.isin's 92 µs/row
-                        # (the r11 soak's dominant trigger cost — 9 s
-                        # per 100k-row frame at a 660k-identity slice)
-                        import numpy as _np
-
-                        hit = _np.fromiter(
-                            (t in slice_seen for t in zip(
-                                pdf["commit_lsn"].tolist(),
-                                pdf["commit_idx"].tolist(),
-                                pdf["idempotency_key"].tolist())),
-                            dtype=bool, count=len(pdf))
-                        pdf = pdf[~hit]
-                    pdf = pdf.drop(columns=["_pid"])
                 if len(pdf):
                     dup = pdf.duplicated(subset=IDENTITY, keep="first")
                     if prev_tail is not None:
@@ -1126,40 +892,33 @@ class DeliveryEngine:
                 if len(self._lsn_maxes) > self.ledger_trim_batches:
                     self._lsn_maxes = self._lsn_maxes[-self.ledger_trim_batches:]
                     self._ledger_trim_lsn = self._lsn_maxes[0]
-            if not self.low_latency:
-                self._compact_ledger()  # slices self-compact in-task
+            self._compact_ledger()
             ring_new = summary_pdf[summary_pdf["kind"] == "ring"].sort_values(
                 ["acked_at", "commit_lsn", "commit_idx", "idempotency_key"]
             )[IDENTITY + ["group_id", "deliver_count", "acked_at"]]
-            if self.low_latency:
-                # the ring is advisory UI state (last-N acked) — its
-                # write rides a background thread off the trigger path;
-                # a crash loses at most the last ring refresh, never a
-                # durability-bearing row
-                self._bg_submit(self._update_ring, ring_new)
-            else:
-                self._update_ring(ring_new)
+            self._update_ring(ring_new)
 
         # new pending: executor-spilled failed/blocked rows (payloads
         # already attached). Failed rows get bumped deliver_count +
         # backoff; blocked rows keep their count (never attempted).
         new_pending = pd.DataFrame()
         discarded = pd.DataFrame()
+        failures = None
         if os.path.isdir(fail_dir) and os.listdir(fail_dir):
-            merged = pd.concat(
+            failures = pd.concat(
                 [pq.read_table(os.path.join(fail_dir, f)).to_pandas()
                  for f in os.listdir(fail_dir)],
                 ignore_index=True,
             ).drop_duplicates(subset=IDENTITY, keep="first")  # task-retry double-writes
-            bump = merged["status"] == "failed"
-            merged.loc[bump, "deliver_count"] = merged.loc[bump, "deliver_count"] + 1
-            merged["not_visible_until"] = [
+            bump = failures["status"] == "failed"
+            failures.loc[bump, "deliver_count"] = failures.loc[bump, "deliver_count"] + 1
+            failures["not_visible_until"] = [
                 now + backoff_s(dc, self.backoff_base_s) if st == "failed" else now
-                for dc, st in zip(merged["deliver_count"], merged["status"])
+                for dc, st in zip(failures["deliver_count"], failures["status"])
             ]
-            over = merged["deliver_count"] > self.max_retry_count
-            discarded = merged[over]
-            new_pending = merged[~over][delivery_cols + ["deliver_count", "not_visible_until"]]
+            over = failures["deliver_count"] > self.max_retry_count
+            discarded = failures[over]
+            new_pending = failures[~over][delivery_cols + ["deliver_count", "not_visible_until"]]
             for f in os.listdir(fail_dir):
                 os.remove(os.path.join(fail_dir, f))
             os.rmdir(fail_dir)
@@ -1204,9 +963,8 @@ class DeliveryEngine:
                     extra={"batch_id": batch_id, "delivered": n_delivered})
             if n_failed:
                 first_err = None
-                fails = locals().get("merged")
-                if fails is not None and "error" in fails.columns:
-                    errs = fails.loc[fails["status"] == "failed", "error"]
+                if failures is not None:
+                    errs = failures.loc[failures["status"] == "failed", "error"]
                     first_err = str(errs.iloc[0]) if len(errs) else None
                 self.tracer.error(
                     cid,

@@ -127,7 +127,6 @@ class ConsumerPipeline:
             batch_cols=tuple(spec.batch_keys()),
             tracer=tracer,
             consumer_id=spec.name,
-            low_latency=getattr(spec, "low_latency", False),
         )
 
     # --- the operator chain (pure, streaming-safe) ------------------------
@@ -273,30 +272,12 @@ class ConsumerPipeline:
             self.metrics.record_batch(self.spec.name, stats)
             self.health.observe_batch(stats)
 
-        writer = (
+        return (
             compiled.writeStream.foreachBatch(_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
+            .start()
         )
-        if getattr(self.spec, "async_progress", False):
-            # offset/commit logs persist every async_ckpt_interval_ms
-            # instead of per trigger; restart may replay up to the
-            # interval's worth of batches, so the ledger trim window
-            # must cover that horizon (replays older than the trim
-            # watermark would no longer be deduped)
-            interval = int(getattr(self.spec, "async_ckpt_interval_ms",
-                                   1000))
-            horizon = interval // max(int(trigger_seconds * 1000), 1) + 2
-            self.engine.ledger_trim_batches = max(
-                self.engine.ledger_trim_batches, horizon)
-            writer = (
-                writer.option("asyncProgressTrackingEnabled", "true")
-                .option("_asyncProgressTrackingOverrideSinkSupportCheck",
-                        "true")
-                .option("asyncProgressTrackingCheckpointIntervalMs",
-                        str(interval))
-            )
-        return writer.start()
 
 
 def kafka_writer(compiled: DataFrame, bootstrap_servers: str, checkpoint_dir: str):

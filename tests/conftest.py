@@ -47,7 +47,7 @@ _DEEP_TESTS = (
     "tests/test_functions.py::test_minipy_program_semantics_corpus",
     "tests/test_minipy_property.py::",
     # chaos/soak matrices — representatives stay: fence[300],
-    # pull_queue[403], async_horizon_trim[1]
+    # pull_queue[403], ledger_trim_horizon[1]
     "tests/test_chaos_state.py::test_chaos_backfill_fence[301",
     "tests/test_chaos_state.py::test_chaos_backfill_fence[302",
     "tests/test_chaos_state.py::test_chaos_backfill_fence[303",
@@ -60,7 +60,7 @@ _DEEP_TESTS = (
     "tests/test_chaos_state.py::test_chaos_pull_queue[405",
     "tests/test_chaos_state.py::test_chaos_pull_queue[406",
     "tests/test_chaos_state.py::test_chaos_pull_queue[407",
-    "tests/test_chaos_state.py::test_chaos_async_horizon_trim[0",
+    "tests/test_chaos_state.py::test_chaos_ledger_trim_horizon[0",
     # streaming parity/restart matrices — reservoir twin stays
     "tests/test_streaming_sketch.py::test_streaming_hll_equals_batch",
     "tests/test_streaming_sketch.py::test_streaming_cm_equals_batch",

@@ -64,8 +64,7 @@ def _drain(engine, spark, schema, start_bid, cap=40):
     raise AssertionError(f"drain did not converge in {cap} rounds")
 
 
-def _run_seed(spark, tmp_path, seed: int,
-              low_latency: bool = False) -> None:
+def _run_seed(spark, tmp_path, seed: int) -> None:
     rng = random.Random(seed)
     schema = ("group_id string, commit_lsn long, commit_idx long, "
               "idempotency_key string, key string, value string")
@@ -85,10 +84,10 @@ def _run_seed(spark, tmp_path, seed: int,
         return DeliveryEngine(
             "chaos", cfg, state_dir=str(base / "state"),
             batch_size=rng.choice([2, 3]), max_retry_count=5,
-            backoff_base_s=0.0, low_latency=low_latency,
-            # low chaos compaction threshold so the sweep exercises
-            # in-task slice compaction, not just appends
-            ledger_compact_files=6 if low_latency else 64,
+            backoff_base_s=0.0,
+            # low compaction threshold so restarts and replays run
+            # against a compacted ledger, not just appends
+            ledger_compact_files=6,
         )
 
     engine = make_engine()
@@ -173,25 +172,6 @@ N_SEEDS = int(os.environ.get("CHAOS_SEEDS", "100") or 0)
 def test_chaos_single_seed_smoke(spark, tmp_path):
     """One fixed seed always runs in the default suite."""
     _run_seed(spark, tmp_path, 20260815)
-
-
-def test_chaos_single_seed_low_latency(spark, tmp_path):
-    """The low-latency engine (task-side sliced ledger, async ring,
-    in-task compaction — r9 verdict task #5) under the same combined
-    fault schedule: same four invariants."""
-    _run_seed(spark, tmp_path, 20260815, low_latency=True)
-
-
-@pytest.mark.parametrize("seed", range(200, 225))
-def test_chaos_low_latency_sweep(spark, tmp_path, seed):
-    """25 independent schedules against the low-latency engine —
-    restart mid-run, redelivery, and replay now also exercise the
-    executor-side slice cache (which survives the simulated engine
-    restart, as reused Python workers do in production) and the
-    per-slice compaction path."""
-    if N_SEEDS < 25:
-        pytest.skip(f"CHAOS_SEEDS={N_SEEDS} < 25: low-latency sweep off")
-    _run_seed(spark, tmp_path, seed, low_latency=True)
 
 
 @pytest.mark.parametrize("seed", range(100))

@@ -285,21 +285,20 @@ def test_chaos_pull_queue(spark, tmp_path, seed):
 
 
 # ---------------------------------------------------------------------------
-# async-progress horizon-edge ledger-trim chaos (r11 verdict task #5)
+# ledger-trim horizon-edge chaos
 #
-# The analytic claim under test: with async progress the offset log can
-# lag up to interval/trigger + 1 micro-batches, so the ledger trim
-# window is widened to H = interval/trigger + 2 batches
-# (streaming/pipeline.py start_stream).  The hazard the widening must
-# close: low-latency slice COMPACTION physically deletes identities
-# below the trim watermark IN-TASK, concurrently with delivery — if a
-# restart then replays a batch whose identities were already trimmed
-# from disk, the ledger cannot dedupe them and they redeliver.  The
-# seed drives the edge directly: advance the watermark far enough that
-# compaction has physically trimmed, restart into a fresh engine
-# (watermark resets to 0, exactly like a real restart), replay at the
-# MAXIMUM legal depth while new batches re-advance the watermark and
-# re-compact, and assert the soak invariants.  A final negative probe
+# The claim under test: with a trim window of H = ledger_trim_batches
+# batches, a replay up to H-1 batches deep still finds every identity
+# on disk (a restarted stream replays only its last uncommitted batch,
+# well inside the window).  The hazard the window must close: ledger
+# COMPACTION after a batch physically deletes identities below the
+# trim watermark — if a restart then replays a batch whose identities
+# were already trimmed from disk, the ledger cannot dedupe them and
+# they redeliver.  The seed drives the edge directly: advance the
+# watermark far enough that compaction has physically trimmed, restart
+# into a fresh engine (watermark resets to 0, exactly like a real
+# restart), replay at the MAXIMUM depth while new batches are
+# delivered, and assert the soak invariants.  A final negative probe
 # replays one batch BEYOND the physically-surviving window and asserts
 # the checker detects exactly its identities as duplicates — proof the
 # seed can see the loss it guards against.
@@ -344,11 +343,14 @@ def _mk_batch(spark, bid, groups=3):
 
 
 @pytest.mark.parametrize("seed", [0, 1])
-def test_chaos_async_horizon_trim(spark, tmp_path, seed):
+def test_chaos_ledger_trim_horizon(spark, tmp_path, seed):
+    """A restarted engine replays the last horizon-1 batches against the
+    ledger its predecessor trimmed and compacted: every replay inside
+    the window is suppressed, and one batch past it redelivers."""
     from sequin_spark.streaming.delivery import DeliveryEngine
 
     rng = random.Random(seed)
-    horizon = rng.choice([4, 5])          # interval/trigger + 2 analog
+    horizon = rng.choice([4, 5])          # ledger_trim_batches
     total = horizon + rng.randint(4, 6)
     state = str(tmp_path / "state")
     log_dir = str(tmp_path / "log")
@@ -359,12 +361,12 @@ def test_chaos_async_horizon_trim(spark, tmp_path, seed):
             "chaos_soak",
             sink_config={"log_dir": log_dir, "attempt_dir": att_dir,
                          "seed": seed, "fail_permille": 0},
-            state_dir=state, low_latency=True,
+            state_dir=state,
             ledger_trim_batches=horizon, ledger_compact_files=1,
             partition_count=2)
 
     # incarnation A: enough batches that the watermark advanced and
-    # in-task compaction physically trimmed the oldest identities
+    # ledger compaction physically trimmed the oldest identities
     a = engine()
     for bid in range(1, total + 1):
         stats = a.process_batch(_mk_batch(spark, bid), bid)
@@ -380,16 +382,16 @@ def test_chaos_async_horizon_trim(spark, tmp_path, seed):
                if 100 + bid not in survivors]
     assert dropped, "compaction never physically trimmed — seed inert"
 
-    # the analytic widening's guarantee: every batch inside the max
-    # legal async replay window (H-1 deep) is still on disk
+    # the trim horizon's guarantee: every batch inside the replay
+    # window (H-1 deep) is still on disk
     replay_depth = horizon - 1
     replay_bids = list(range(total - replay_depth + 1, total + 1))
     assert all(100 + bid in survivors for bid in replay_bids), (
         f"replay window {replay_bids} not covered by surviving ledger "
         f"(trim horizon too narrow): survivors={sorted(survivors)}")
 
-    # replay at the edge, interleaved with new batches so B's own
-    # watermark re-advances and compaction re-runs DURING the replay
+    # replay at the edge, interleaved with new batches so B's ledger
+    # compaction re-runs DURING the replay
     next_bid = total + 1
     for i, bid in enumerate(replay_bids):
         stats = b.process_batch(_mk_batch(spark, bid), 1000 + bid)

@@ -1,25 +1,8 @@
-"""JDBC poller query builders + skew salting."""
+"""Skew salting: a salted two-phase count equals the plain count."""
 
 from pyspark.sql import Row
 
 from sequin_spark.operators.skew import salted_count
-from sequin_spark.sources.jdbc import cdc_poll_query, snapshot_predicates
-
-
-def test_cdc_poll_query_shapes():
-    q0 = cdc_poll_query("cdc_log", None, limit=500)
-    assert "WHERE" not in q0 and "ORDER BY commit_lsn, commit_idx LIMIT 500" in q0
-    q1 = cdc_poll_query("cdc_log", (100, 5))
-    assert "commit_lsn > 100" in q1 and "commit_lsn = 100 AND commit_idx > 5" in q1
-
-
-def test_snapshot_predicates_disjoint_cover():
-    preds = snapshot_predicates(1, 1000, 4, "id")
-    assert len(preds) == 4
-    assert preds[0] == "id >= 1 AND id < 251"
-    assert preds[-1].startswith("id >= ")
-    # last partition is open-ended → covers the tail
-    assert "AND" not in preds[-1]
 
 
 def test_salted_count_matches_plain(spark):

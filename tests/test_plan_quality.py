@@ -419,8 +419,8 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
     but the DELIVERY job's physical plan (the foreachBatch body's
     repartition + sort ahead of the Arrow deliver pass) had no
     baseline — a silent extra shuffle in arrange_for_delivery would
-    only surface as trigger-latency drift.  Fingerprint the plan per
-    mode (sync / low-latency) against a committed baseline: exactly
+    only surface as trigger-latency drift.  Fingerprint the plan
+    against a committed baseline: exactly
     ONE group-hash Exchange and ONE in-partition Sort, no joins."""
     import re as _re
 
@@ -437,20 +437,17 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
         "group_id string, commit_lsn long, commit_idx long, "
         "idempotency_key string, key string, value string, "
         "topic string").withColumn("deliver_count", F.lit(0))
-    for mode, low_latency in [("sync", False), ("lowlat", True)]:
-        eng = DeliveryEngine(
-            sink_type="benchmark", sink_config={},
-            state_dir=str(tmp_path / mode), routing_cols=("topic",),
-            low_latency=low_latency)
-        arranged = eng.arrange_for_delivery(rows)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            arranged.explain("formatted")
-        plan = buf.getvalue()
-        got = plan_stats(plan)
-        got["sorts"] = len(_re.findall(r"\(\d+\) Sort\b", plan))
-        assert got == baseline[mode], (
-            f"delivery plan fingerprint drifted for mode={mode}: "
-            f"{got} != committed {baseline[mode]} — a new shuffle or "
-            f"sort on the trigger path needs a justified baseline "
-            f"update in the same commit")
+    eng = DeliveryEngine(
+        sink_type="benchmark", sink_config={},
+        state_dir=str(tmp_path / "sync"), routing_cols=("topic",))
+    arranged = eng.arrange_for_delivery(rows)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        arranged.explain("formatted")
+    plan = buf.getvalue()
+    got = plan_stats(plan)
+    got["sorts"] = len(_re.findall(r"\(\d+\) Sort\b", plan))
+    assert got == baseline["sync"], (
+        f"delivery plan fingerprint drifted: {got} != committed {baseline['sync']} — a new shuffle or "
+        f"sort on the trigger path needs a justified baseline "
+        f"update in the same commit")

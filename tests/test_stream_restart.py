@@ -6,8 +6,6 @@ idempotency ledger, the reference's at-least-once + ledger dedup)."""
 
 import json
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from sequin_spark.cdc import eventize_orders
@@ -25,19 +23,7 @@ def _delivered_keys(out_dir):
     return [int(json.loads(v)["o_orderkey"]) for v in rows]
 
 
-@pytest.mark.parametrize("low_latency,async_progress", [
-    (False, False),
-    (True, False),
-    # r10 verdict task #1: async progress tracking — offset/commit
-    # logs lag the processed batches (persisted on an interval), so a
-    # restart replays a WIDER window; the ledger (slice append before
-    # ack) must still dedupe every replayed identity.  The short
-    # interval + tiny trigger below maximizes the chance the stop
-    # lands with offsets unpersisted.
-    (True, True),
-])
-def test_restart_and_replay_exactly_once(spark, sf_dir, tmp_path,
-                                         low_latency, async_progress):
+def test_restart_and_replay_exactly_once(spark, sf_dir, tmp_path):
     src = tmp_path / "src"
     out = tmp_path / "out"
     state = tmp_path / "state"
@@ -57,9 +43,6 @@ def test_restart_and_replay_exactly_once(spark, sf_dir, tmp_path,
         spec = ConsumerSpec(
             name="orders-log", sink_type="file_log",
             sink_config={"path": str(out)}, transform="record_only",
-            low_latency=low_latency,
-            async_progress=async_progress,
-            async_ckpt_interval_ms=500,
         )
         pipe = ConsumerPipeline(spec, state_dir=str(state))
         stream = spark.readStream.schema(schema).parquet(str(src))

@@ -373,6 +373,46 @@ def test_ledger_compaction(spark, tmp_path):
     assert engine.read_ledger(spark).count() == 4  # nothing lost
 
 
+def test_ledger_left_in_partition_subdirs_still_dedupes(spark, tmp_path):
+    """Older versions could write the ledger as per-partition
+    subdirectories (ledger/p00000/*.parquet, with an extra group_id
+    column).  After an upgrade those identities must still suppress
+    redelivery, also once flat-ledger compaction has run beside them."""
+    import os as _os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    df_schema = ("group_id string, commit_lsn long, commit_idx long, "
+                 "idempotency_key string, key string, value string")
+    rows = [(f"g{i % 3}", 100 + i, 0, f"k{i}", f"g{i % 3}", "{}")
+            for i in range(6)]
+    state = tmp_path / "state"
+    slice_dir = state / "ledger" / "p00000"
+    slice_dir.mkdir(parents=True)
+    old = pd.DataFrame(
+        [(lsn, idx, key, grp) for grp, lsn, idx, key, _k, _v in rows],
+        columns=["commit_lsn", "commit_idx", "idempotency_key", "group_id"])
+    papq.write_table(pa.Table.from_pandas(old, preserve_index=False),
+                     str(slice_dir / "batch-0-old.parquet"))
+    (state / "ledger" / "_layout.json").write_text('{"partition_count": 8}')
+
+    engine = DeliveryEngine("benchmark", state_dir=str(state),
+                            ledger_compact_files=2)
+    assert engine.process_batch(
+        spark.createDataFrame(rows, df_schema), 1)["delivered"] == 0
+    # new identities still deliver, and their flat files compact
+    for bid in (2, 3):
+        fresh = [(f"g{bid}", 200 + bid, 0, f"n{bid}", f"g{bid}", "{}")]
+        assert engine.process_batch(
+            spark.createDataFrame(fresh, df_schema), bid)["delivered"] == 1
+    assert any(f.startswith("compact-")
+               for f in _os.listdir(engine.ledger_dir))
+    assert engine.process_batch(
+        spark.createDataFrame(rows, df_schema), 4)["delivered"] == 0
+
+
 def test_yaml_plan_apply(tmp_path):
     doc = """
 consumers:
@@ -557,7 +597,7 @@ def test_pause_on_full_overflow_drains_fifo_exactly_once(spark, tmp_path):
 
 
 def test_pause_on_full_overflow_replay_is_exactly_once(spark, tmp_path):
-    """A batch REPLAY while paused (async progress / crash before
+    """A batch REPLAY while paused (crash before
     checkpoint) spills the same rows twice; the drain must deliver
     them once — the ledger anti-join drops the second copy."""
     import os

@@ -7,8 +7,9 @@ firing LIVE:
   chunk appended first — the documented at-least-once window), with
   per-key attempt caps so the engine's retry/backoff path drains them;
 * the streaming query is stopped and restarted from its checkpoint
-  mid-load (worker-crash analog; with async progress the offset log
-  lags, so restarts REPLAY and the ledger must dedupe);
+  mid-load (worker-crash analog; a trigger in flight at the stop has
+  no committed offsets, so restarts REPLAY it and the ledger must
+  dedupe);
 * the backfill-fence and pull-queue chaos schedules
   (tests/test_chaos_state.py) run concurrently on the same JVM, their
   own invariants asserted inside;
@@ -34,7 +35,7 @@ pk_cardinality):
    across faults and restarts);
 3. exactly-once modulo the documented windows — identities appearing
    more than once must have a partial-append occurrence OR straddle a
-   restart boundary (the async-progress replay window: delivered in a
+   restart boundary (the replay window: delivered in a
    trigger whose offset/ledger commit the kill destroyed — the
    reference's delivered-then-crashed-before-ack at-least-once
    contract).  Same-incarnation full-append duplicates are real bugs;
@@ -148,8 +149,6 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
                      "seed": seed, "fail_permille": fail_permille,
                      "max_fails_per_key": 2, "partial": True},
         batch_size=200,
-        low_latency=True, async_progress=True,
-        async_ckpt_interval_ms=1000,
     )
 
     def start():
@@ -247,12 +246,12 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
         side.start()
 
     # the load: restart the query from its checkpoint every ~1/3 of the
-    # run (worker-crash analog, replays under async progress)
+    # run (worker-crash analog, replays the uncommitted trigger)
     t0 = time.time()
     restarts = 0
     # incarnation boundaries (time_ns after each mid-run stop returns):
     # appends on either side of a boundary belong to different query
-    # incarnations — the async-progress replay window between them is
+    # incarnations — the replay window between them is
     # the engine's documented at-least-once surface (same contract as
     # the reference: delivered-then-crashed-before-ack redelivers)
     boundaries_ns: list[int] = []
@@ -422,9 +421,8 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
                        for a, b in zip(df["commit_lsn"], df["commit_idx"])}
     led_vs = {(lsn - 5_000_000) * TXN + idx for lsn, idx in ledger_ids}
 
-    # listener-side throughput — UNDER async progress the listener sees
-    # only the triggers that carry a progress event (often just the
-    # first), so this is a lower-bound diagnostic, not the headline
+    # listener-side throughput — a diagnostic (triggers cut by a stop
+    # carry no progress event), not the headline
     rows = 0
     exec_ms = 0
     for prog in listener.progress.values():
@@ -438,7 +436,7 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
     files = sorted(glob.glob(os.path.join(log_dir, "part-*.jsonl")))
     # headline throughput = delivered rows over the delivery window,
     # reconstructed from the appends' time_ns filename stamps — the
-    # only observer that works across restarts AND async progress
+    # only observer that works across restarts
     append_ns = []
     for fp in files:
         m = re.search(r"part-(\d+)-", os.path.basename(fp))
@@ -490,14 +488,14 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
     # offset/ledger commit the mid-run kill destroyed, redelivered by
     # the replay after restart; the reference's delivered-then-
     # crashed-before-ack contract).  WITHIN one query incarnation the
-    # ledger slices + sort-adjacent dedup must be exact: two full
+    # ledger + sort-adjacent dedup must be exact: two full
     # appends of one identity in the same incarnation is a real bug.
     import bisect
 
     # Bound the excuse to the trigger(s) the kill actually destroyed:
     # a replayed identity must have FIRST appeared inside the
     # uncommitted-progress window right before the boundary it crossed
-    # (async offset-log interval + trigger cadence, sized by the worst
+    # (trigger cadence + in-flight trigger, sized by the worst
     # trigger actually measured — under load a trigger can run far past
     # its 1 s cadence, widening the genuinely-uncommitted window).  A
     # duplicate first delivered long before the kill (e.g. a ledger-trim
@@ -562,7 +560,7 @@ def run_soak(seconds: int, rate: int, seed: int, out_path: str,
         "bad_order_groups": bad_order[:5],
         "bad_gap_groups": bad_gap[:5],
         "undocumented_dups": sorted(undocumented_dups)[:5],
-        "mode": "low_latency+async_progress",
+        "mode": "default",
         "stop_error": stop_err,
     }
     ok = all(inv.values()) and not errs
