@@ -143,8 +143,9 @@ ALWAYS_PRESENT_DELIVERY_COLS = ("group_id",)
 def batch_keys_for(sink_type: str) -> tuple[str, ...]:
     """The Broadway batch_key tuple for a sink type.
 
-    Single source of truth shared by ConsumerSpec.batch_keys() and
-    DeliveryEngine's batch_cols derivation.  Unknown sink types
+    Single source of truth: DeliveryEngine intersects it with its
+    routing columns (plus ALWAYS_PRESENT_DELIVERY_COLS) to get the
+    batch_cols that close a chunk.  Unknown sink types
     (tests register ad-hoc fakes) deliberately get kafka's ("topic",)
     shape: chunks close on a topic-ish column when the rows carry one,
     else run whole-partition — the conservative many-rows-per-call

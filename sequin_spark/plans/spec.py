@@ -225,14 +225,6 @@ class ConsumerSpec:
     def routing_keys(self) -> list[str]:
         return list(ROUTING_SCHEMAS[self.routing_schema()].keys())
 
-    def batch_keys(self) -> list[str]:
-        """Routing keys that bound one sink call (the reference's
-        Broadway batch_key, sink_pipeline.ex:371-430); the rest are
-        per-message attributes delivered many-to-a-call."""
-        from sequin_spark.functions.routing import batch_keys_for
-
-        return list(batch_keys_for(self.routing_schema()))
-
     def validate(self) -> list[str]:
         errs = []
         if self.sink_type not in SINK_REGISTRY:

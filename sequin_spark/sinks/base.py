@@ -4,8 +4,8 @@ Reference shape: every sink shares the Broadway pipeline shell
 (lib/sequin/runtime/sink_pipeline.ex) — batches keyed by the routing
 struct, bounded by batch_size/batch bytes, delivered with retries and
 idempotency. Our SPI mirrors that: the delivery engine hands each sink
-an ordered ``SinkBatch`` (same group, cursor order) and the sink either
-succeeds or raises.
+an ordered ``SinkBatch`` (one batch-key run, cursor order within each
+group) and the sink either succeeds or raises.
 
 Sinks are constructed executor-side from (type, config) — the factory
 must be picklable, the client is built lazily in ``open()`` per task
@@ -29,24 +29,19 @@ from dataclasses import dataclass, field
 
 @dataclass
 class SinkBatch:
-    """One delivery unit: rows for one (routing key, group) in cursor order."""
+    """One delivery unit: a run of rows that share one batch-key value
+    (``routing``), sorted (group_id, commit_lsn, commit_idx).  A chunk
+    may span groups; it closes only on a batch-key change, at
+    batch_size rows, or at batch_bytes encoded bytes."""
 
     routing: dict
     rows: list[dict]  # serialized event payloads
 
-    @property
-    def n_bytes(self) -> int:
-        return sum(len(r.get("value", "")) for r in self.rows)
-
 
 class Sink:
-    """Base sink. Subclasses implement deliver(); sinks that can consume
-    a whole ordered partition frame at once (noop, file log, bulk-import
-    APIs) additionally implement deliver_frame(pdf) — the vectorized
-    fast path. The frame arrives sorted (group_id, commit_lsn,
-    commit_idx), so sequential consumption preserves per-group order;
-    the trade-off is partition-granular failure (the whole frame retries)
-    instead of group-granular."""
+    """Base sink. Subclasses implement deliver(batch): return to ack the
+    whole chunk, or raise to fail it (the engine retries it and holds
+    back its groups' later rows)."""
 
     sink_type = "base"
     # per-sink default batch sizes (sink_consumer.ex:332-345)
@@ -55,7 +50,6 @@ class Sink:
     # byte-based batching; e.g. pub/sub's 10 MB request limit,
     # gcp_pubsub_pipeline.ex:20,28). None = count-bound only.
     default_batch_bytes: int | None = None
-    deliver_frame = None  # type: ignore[assignment]
 
     def __init__(self, config: dict | None = None):
         self.config = config or {}
@@ -83,9 +77,6 @@ class NoopSink(Sink):
     def deliver(self, batch: SinkBatch) -> None:
         self.delivered += len(batch.rows)
 
-    def deliver_frame(self, pdf) -> None:
-        self.delivered += len(pdf)
-
 
 class FailingSink(Sink):
     """Test double: fails deliveries matching a predicate config, for
@@ -93,20 +84,6 @@ class FailingSink(Sink):
     way — with deliberately failing pipelines)."""
 
     sink_type = "failing"
-
-    def __init__(self, config=None):
-        super().__init__(config)
-        if not self.config.get("frame_mode"):
-            # default: chunked deliver() path; frame_mode=True exposes
-            # a failing deliver_frame so tests can exercise the
-            # vectorized path's failure/blocking semantics too
-            self.deliver_frame = None
-
-    def deliver_frame(self, pdf) -> None:
-        needle = self.config.get("fail_substring", "")
-        if needle and pdf["key"].astype(str).str.contains(
-                needle, regex=False).any():
-            raise RuntimeError(f"injected frame failure for {needle}")
 
     def deliver(self, batch: SinkBatch) -> None:
         needle = self.config.get("fail_substring", "")
@@ -262,13 +239,6 @@ class FileLogSink(Sink):
     sink_type = "file_log"
     default_batch_size = 200
 
-    def __init__(self, config=None):
-        super().__init__(config)
-        if self.config.get("row_path_only"):
-            # force the chunked deliver() path (one file per SinkBatch) —
-            # lets tests observe batch boundaries (count/byte bounds)
-            self.deliver_frame = None
-
     def deliver(self, batch: SinkBatch) -> None:
         import uuid as _uuid
 
@@ -278,12 +248,6 @@ class FileLogSink(Sink):
         with open(fname, "a") as f:
             for row in batch.rows:
                 f.write(json.dumps(row) + "\n")
-
-    def deliver_frame(self, pdf) -> None:
-        path = self.config["path"]
-        os.makedirs(path, exist_ok=True)
-        fname = os.path.join(path, f"part-{os.getpid()}-{int(time.time() * 1e6)}.jsonl")
-        pdf.to_json(fname, orient="records", lines=True)
 
 
 class HttpPushSink(Sink):

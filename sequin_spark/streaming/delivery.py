@@ -45,6 +45,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sequin_spark.functions.routing import (
+    ALWAYS_PRESENT_DELIVERY_COLS, batch_keys_for)
 from sequin_spark.sinks.base import SinkBatch, create_sink
 
 # Bounded per-task summary rows (NOT per-event): kind='agg' rows carry
@@ -101,7 +103,6 @@ class DeliveryEngine:
         partition_count: int = 8,
         max_retry_count: int = 3,
         routing_cols: tuple[str, ...] = (),
-        batch_cols: tuple[str, ...] | None = None,
         backoff_base_s: float = BACKOFF_MIN_S,
         load_shedding_policy: str = "pause_on_full",
         max_pending: int | None = None,
@@ -129,18 +130,10 @@ class DeliveryEngine:
         # batch_key (sink_pipeline.ex:371-430).  Per-message routing keys
         # (kafka message_key, kinesis partition_key, ...) must NOT close
         # chunks — at high group cardinality that degenerates to one-row
-        # sink calls (the r11 soak's ~700 rows/s delivery ceiling).  None
-        # = derive from the sink's routing schema; passing routing_cols
-        # explicitly restores the old per-message behavior.
-        if batch_cols is None:
-            from sequin_spark.functions.routing import (
-                ALWAYS_PRESENT_DELIVERY_COLS, batch_keys_for)
-
-            derived = batch_keys_for(sink_type)
-            batch_cols = tuple(
-                c for c in derived
-                if c in self.routing_cols or c in ALWAYS_PRESENT_DELIVERY_COLS)
-        self.batch_cols = tuple(batch_cols)
+        # sink calls (the r11 soak's ~700 rows/s delivery ceiling).
+        self.batch_cols = tuple(
+            c for c in batch_keys_for(sink_type)
+            if c in self.routing_cols or c in ALWAYS_PRESENT_DELIVERY_COLS)
         self.backoff_base_s = backoff_base_s
         self.load_shedding_policy = load_shedding_policy
         # The reference's 50k message cap is PER message-store
@@ -588,7 +581,6 @@ class DeliveryEngine:
             double-writes are resolved on read (dedup by identity)."""
             sink = create_sink(sink_type, sink_config)
             sink.open()
-            vectorized = callable(getattr(sink, "deliver_frame", None))
             status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
                            "status", "error", "deliver_count"]
             # per-task latency histogram: {success: [bucket counts..., +Inf]}
@@ -711,42 +703,6 @@ class DeliveryEngine:
                 if "_deferred" in pdf.columns:
                     pdf = pdf.drop(columns=["_deferred"])
                 if not len(pdf):
-                    continue
-                if vectorized:
-                    # fast path: whole ordered partition frame at once
-                    # (order preserved by the sort; partition-granular
-                    # failure instead of group-granular).  Rows of
-                    # groups that failed in an EARLIER frame of this
-                    # task are blocked first (cross-frame carry).
-                    blk = pd.Series(False, index=pdf.index)
-                    if failed_groups:
-                        blk = pdf["group_id"].isin(failed_groups)
-                    dpdf = pdf[~blk]
-                    st, err = "delivered", ""
-                    if len(dpdf):
-                        t0 = time.perf_counter()
-                        try:
-                            sink.deliver_frame(dpdf)
-                        except Exception as e:  # noqa: BLE001
-                            st, err = "failed", str(e)[:500]
-                            failed_groups.update(
-                                g for g in dpdf["group_id"].dropna())
-                        _observe(st == "delivered",
-                                 int((time.perf_counter() - t0) * 1e6))
-                    status_pdf = pd.DataFrame({
-                        "commit_lsn": pdf["commit_lsn"],
-                        "commit_idx": pdf["commit_idx"],
-                        "idempotency_key": pdf["idempotency_key"],
-                        "group_id": pdf["group_id"],
-                        "status": [
-                            "blocked" if b else st for b in blk],
-                        "error": [
-                            "group blocked" if b else err for b in blk],
-                        "deliver_count": pdf["deliver_count"].astype("int64"),
-                    })
-                    out = _finish(status_pdf, pdf)
-                    if out is not None:
-                        yield out
                     continue
                 statuses = []
                 # Rows arrive sorted (group_id, lsn, idx). Batches span

@@ -115,7 +115,6 @@ class ConsumerPipeline:
             )
             self.engine = None
             return
-        routing_cols = tuple(spec.routing_keys())
         self.engine = DeliveryEngine(
             sink_type=spec.sink_type,
             sink_config=spec.sink_config,
@@ -123,8 +122,7 @@ class ConsumerPipeline:
             batch_size=spec.batch_size,
             partition_count=spec.partition_count,
             max_retry_count=spec.max_retry_count,
-            routing_cols=routing_cols,
-            batch_cols=tuple(spec.batch_keys()),
+            routing_cols=tuple(spec.routing_keys()),
             tracer=tracer,
             consumer_id=spec.name,
         )

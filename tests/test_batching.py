@@ -8,8 +8,10 @@ import threading
 
 import pytest
 
-from sequin_spark.sinks.base import SinkBatch, create_sink
+from sequin_spark.plans.spec import ConsumerSpec
+from sequin_spark.sinks.base import SINK_REGISTRY, SinkBatch, create_sink
 from sequin_spark.streaming.delivery import DeliveryEngine
+from sequin_spark.streaming.pipeline import ConsumerPipeline
 
 
 def _mk_df(spark, n, value_size):
@@ -36,7 +38,7 @@ def test_byte_bound_splits_batches(spark, tmp_path):
     log = tmp_path / "log"
     engine = DeliveryEngine(
         "file_log",
-        {"path": str(log), "row_path_only": True},
+        {"path": str(log)},
         state_dir=str(tmp_path / "state"),
         batch_size=200,
         batch_bytes=250,
@@ -53,7 +55,7 @@ def test_oversized_row_gets_own_batch(spark, tmp_path):
     log = tmp_path / "log"
     engine = DeliveryEngine(
         "file_log",
-        {"path": str(log), "row_path_only": True},
+        {"path": str(log)},
         state_dir=str(tmp_path / "state"),
         batch_size=200,
         batch_bytes=250,
@@ -79,7 +81,7 @@ def test_count_bound_still_applies(spark, tmp_path):
     log = tmp_path / "log"
     engine = DeliveryEngine(
         "file_log",
-        {"path": str(log), "row_path_only": True},
+        {"path": str(log)},
         state_dir=str(tmp_path / "state"),
         batch_size=4,
         partition_count=1,
@@ -112,7 +114,7 @@ def test_per_message_routing_keys_do_not_close_chunks(spark, tmp_path):
     log = tmp_path / "log"
     engine = DeliveryEngine(
         "file_log",
-        {"path": str(log), "row_path_only": True},
+        {"path": str(log)},
         state_dir=str(tmp_path / "state"),
         batch_size=200,
         routing_cols=("topic", "message_key"),
@@ -132,7 +134,7 @@ def test_batch_key_change_still_closes_chunks(spark, tmp_path):
     log = tmp_path / "log"
     engine = DeliveryEngine(
         "file_log",
-        {"path": str(log), "row_path_only": True},
+        {"path": str(log)},
         state_dir=str(tmp_path / "state"),
         batch_size=200,
         routing_cols=("topic", "message_key"),
@@ -147,23 +149,46 @@ def test_batch_key_change_still_closes_chunks(spark, tmp_path):
     assert sorted(len(b) for b in _batches(log)) == [1] * 10
 
 
-def test_explicit_batch_cols_override(spark, tmp_path):
-    """batch_cols passed explicitly wins over the schema derivation
-    (restores the old close-on-every-routing-key behavior)."""
-    log = tmp_path / "log"
-    engine = DeliveryEngine(
-        "file_log",
-        {"path": str(log), "row_path_only": True},
-        state_dir=str(tmp_path / "state"),
-        batch_size=200,
-        routing_cols=("topic", "message_key"),
-        batch_cols=("topic", "message_key"),
-        partition_count=1,
-    )
-    stats = engine.process_batch(
-        _mk_routed_df(spark, 6, lambda i: "t0"), 0)
-    assert stats["delivered"] == 6
-    assert sorted(len(b) for b in _batches(log)) == [1] * 6
+# The Broadway batch key each registered row sink closes chunks on.
+# Sinks without a reference routing schema route (and batch) like kafka.
+_KAFKA = ("topic",)
+EXPECTED_BATCH_COLS = {
+    "kafka": _KAFKA,
+    "benchmark": _KAFKA,
+    "chaos": _KAFKA,
+    "chaos_soak": _KAFKA,
+    "failing": _KAFKA,
+    "file_log": _KAFKA,
+    "sequin_stream": _KAFKA,
+    "postgres": _KAFKA,
+    "postgres_replica": _KAFKA,
+    "http_push": ("method", "endpoint_path", "headers"),
+    "gcp_pubsub": ("topic_id", "group_id"),
+    "nats": (),
+    "redis_stream": (),
+    "redis_string": (),
+    "sqs": ("queue_url",),
+    "sns": ("topic_arn",),
+    "kinesis": ("stream_arn",),
+    "s2": ("stream",),
+    "azure_event_hub": ("event_hub_name",),
+    "rabbitmq": ("exchange",),
+    "typesense": ("collection", "index_action"),
+    "elasticsearch": ("index_name", "index_action"),
+    "meilisearch": ("index_name", "index_action", "filter", "function",
+                    "context"),
+}
+
+
+@pytest.mark.parametrize(
+    "sink_type",
+    sorted(set(SINK_REGISTRY) - {"parquet_replica", "scd2_history"}))
+def test_consumer_batch_cols_per_sink(sink_type, tmp_path):
+    """A consumer's engine derives its chunk-closing batch key from the
+    sink's routing schema alone; pin it for every registered row sink."""
+    pipe = ConsumerPipeline(ConsumerSpec(name="x", sink_type=sink_type),
+                            state_dir=str(tmp_path))
+    assert pipe.engine.batch_cols == EXPECTED_BATCH_COLS[sink_type]
 
 
 def test_pubsub_default_byte_cap():

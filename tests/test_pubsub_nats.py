@@ -159,7 +159,6 @@ def test_gcp_pubsub_ordering_key_e2e_via_engine(spark, tmp_path):
             sink_config={"endpoint":
                          f"http://127.0.0.1:{srv.server_address[1]}",
                          "project": "p1", "topic_id": "events"})
-        assert spec.batch_keys() == ["topic_id", "group_id"]
         rows = []
         for g, n_vals in (("g1", [1, 2, 3, 4]), ("g2", [1, 2])):
             for n in n_vals:
@@ -175,9 +174,9 @@ def test_gcp_pubsub_ordering_key_e2e_via_engine(spark, tmp_path):
             state_dir=str(tmp_path / "state"),
             batch_size=2,                      # g1 spans TWO chunks
             routing_cols=tuple(spec.routing_keys()),
-            batch_cols=tuple(spec.batch_keys()),
             max_retry_count=5, backoff_base_s=0.0,
         )
+        assert engine.batch_cols == ("topic_id", "group_id")
         stats = engine.process_batch(df, 0)
         # g1's first chunk failed mid-batch; its second chunk must be
         # group-blocked, g2 unaffected

@@ -639,15 +639,12 @@ def test_pause_on_full_overflow_replay_is_exactly_once(spark, tmp_path):
     assert keys == ["kB", "kX"]
 
 
-@pytest.mark.parametrize("use_frame_sink", [False, True])
-def test_group_blocking_carries_across_arrow_frames(spark, tmp_path,
-                                                    use_frame_sink):
+def test_group_blocking_carries_across_arrow_frames(spark, tmp_path):
     """r11: `failed_groups` must be TASK-scoped, not frame-scoped —
     with small Arrow frames a failed group's later rows used to arrive
     in the next frame with the blocking set reset and deliver ahead of
     their failed head (per-group order violation, caught by the chaos
-    sweep under maxRecordsPerBatch=10).  Covers both the chunked
-    deliver() path and the vectorized deliver_frame() path."""
+    sweep under maxRecordsPerBatch=10)."""
     rows = [("gX", 1000 + i, 0, f"kX{i}", "X", '{"n":%d}' % i)
             for i in range(12)]
     rows += [("gok", 2000 + i, 0, f"kok{i}", "ok", "{}") for i in range(3)]
@@ -661,7 +658,7 @@ def test_group_blocking_carries_across_arrow_frames(spark, tmp_path,
     try:
         engine = DeliveryEngine(
             "failing",
-            {"fail_substring": "X", "frame_mode": use_frame_sink},
+            {"fail_substring": "X"},
             state_dir=str(tmp_path / "state"),
             batch_size=3, max_retry_count=9, backoff_base_s=120.0,
             partition_count=1,
@@ -674,14 +671,11 @@ def test_group_blocking_carries_across_arrow_frames(spark, tmp_path,
         else:
             spark.conf.unset(
                 "spark.sql.execution.arrow.maxRecordsPerBatch")
-    # the first gX failure (one 3-row chunk, or one whole 4-row frame
-    # in vectorized mode) fails; EVERY later gX row — including those
-    # in later Arrow frames — must be blocked, never delivered
+    # the first gX chunk (3 rows) fails; EVERY later gX row —
+    # including those in later Arrow frames — must be blocked, never
+    # delivered
     assert stats["delivered"] == 3  # the gok rows only
-    if use_frame_sink:
-        assert stats["failed"] == 4 and stats["blocked"] == 8
-    else:
-        assert stats["failed"] == 3 and stats["blocked"] == 9
+    assert stats["failed"] == 3 and stats["blocked"] == 9
     # nothing from gX reached the ledger
     led = engine.read_ledger(spark)
     if led is not None:
