@@ -29,10 +29,11 @@ from dataclasses import dataclass, field
 
 @dataclass
 class SinkBatch:
-    """One delivery unit: a run of rows that share one batch-key value
-    (``routing``), sorted (group_id, commit_lsn, commit_idx).  A chunk
-    may span groups; it closes only on a batch-key change, at
-    batch_size rows, or at batch_bytes encoded bytes."""
+    """One delivery unit: rows that share one batch-key value
+    (``routing``), each group's rows in (commit_lsn, commit_idx) order.
+    Every batch-key value keeps one open chunk that may span groups; it
+    is sent at batch_size rows, at batch_bytes encoded bytes, when one
+    of its groups moves on to another key, or at the end of the frame."""
 
     routing: dict
     rows: list[dict]  # serialized event payloads

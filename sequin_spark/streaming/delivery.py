@@ -12,10 +12,11 @@ Semantics implemented (citations into the reference):
   (message_ledgers.ex:65-99, sink_pipeline.ex:552-591);
 - replay dedup by (commit_lsn, commit_idx) (slot_message_store_state.ex:98).
 
-Execution model: the micro-batch is repartitioned by group hash
-(partition_count ways — sink_consumer.ex:97) and sorted by (group_id,
-commit_lsn, commit_idx); delivery runs executor-side in mapInPandas
-(one sink client per task). Bookkeeping is ALSO executor-side: each
+Execution model: the micro-batch is repartitioned by group hash into
+as many tasks as its bytes need (arrange_for_delivery) and sorted by
+(group_id, commit_lsn, commit_idx); delivery runs executor-side in
+mapInPandas (one sink client per task, one open chunk per batch-key
+value). Bookkeeping is ALSO executor-side: each
 task appends its delivered cursors straight to the ledger directory
 and its failed/blocked rows (payload included) to a per-batch failures
 directory, then yields only BOUNDED summary rows — per-status counts
@@ -51,7 +52,8 @@ from sequin_spark.sinks.base import SinkBatch, create_sink
 
 # Bounded per-task summary rows (NOT per-event): kind='agg' rows carry
 # (status, n) counts; kind='ring' rows carry the task's last ≤ring_size
-# acked identities for the acknowledged-messages ring.
+# acked identities for the acknowledged-messages ring; each task ends
+# with one kind='task' row (n=1), so the driver counts delivery tasks.
 SUMMARY_SCHEMA = (
     "kind string, status string, n long, commit_lsn long, commit_idx long, "
     "idempotency_key string, group_id string, deliver_count int, acked_at double"
@@ -85,6 +87,16 @@ BACKOFF_MAX_S = 180.0
 def backoff_s(deliver_count: int, base_s: float = BACKOFF_MIN_S) -> float:
     """Exponential backoff 1s → 3min (lib/sequin/time.ex:101)."""
     return min(base_s * (2 ** max(0, deliver_count - 1)), BACKOFF_MAX_S)
+
+
+def _hashable(v):
+    """A batch-key value usable as a dict key: a map column (http_push
+    ``headers``) reaches the task as a dict or a list of pairs."""
+    if isinstance(v, dict):
+        v = sorted(v.items())
+    if isinstance(v, (list, tuple)):
+        return tuple(_hashable(x) for x in v)
+    return v
 
 
 def _write_parquet(path: str, df: pd.DataFrame) -> None:
@@ -136,6 +148,8 @@ class DeliveryEngine:
             if c in self.routing_cols or c in ALWAYS_PRESENT_DELIVERY_COLS)
         self.backoff_base_s = backoff_base_s
         self.load_shedding_policy = load_shedding_policy
+        # partition_count sizes only this cap, not the delivery task
+        # count (arrange_for_delivery sizes that to the batch).
         # The reference's 50k message cap is PER message-store
         # partition (slot_message_store_state.ex:18 default ×
         # :partition at :26 — a consumer holds partition_count stores),
@@ -425,7 +439,15 @@ class DeliveryEngine:
 
     def arrange_for_delivery(self, new_rows: DataFrame) -> DataFrame:
         """Physical layout for ordered delivery: ONE group-hash
-        exchange + per-partition sort; idempotency_key as the final
+        exchange + per-partition sort.  The exchange names no partition
+        count (REPARTITION_BY_COL), so adaptive execution may coalesce
+        it to the tasks the batch's bytes need (ceil(bytes /
+        minPartitionSize) for a small batch), capped at
+        spark.sql.shuffle.partitions; partition_count plays no part.
+        Coalescing merges whole hash partitions and the sort runs above
+        the coalesced read, so each group stays in one sorted task.  Not
+        REBALANCE: adaptive execution may split a skewed rebalance
+        partition, and with it a group.  idempotency_key as the final
         sort key makes equal identities adjacent (dedup), and
         deliver_count DESC prefers the pending-retry copy (its backoff
         bookkeeping) when a retry collides with a source redelivery.
@@ -433,9 +455,7 @@ class DeliveryEngine:
         (tests/test_plan_quality.py::test_delivery_plan_fingerprint —
         a silent extra shuffle here would otherwise only show up as
         trigger-latency drift)."""
-        return new_rows.repartition(
-            self.partition_count, "group_id"
-        ).sortWithinPartitions(
+        return new_rows.repartition("group_id").sortWithinPartitions(
             "group_id", "commit_lsn", "commit_idx", "idempotency_key",
             F.col("deliver_count").desc(),
         )
@@ -705,16 +725,17 @@ class DeliveryEngine:
                 if not len(pdf):
                     continue
                 statuses = []
-                # Rows arrive sorted (group_id, lsn, idx). Batches span
-                # groups but never split the per-group order, keyed by the
-                # BATCH-key tuple — the reference's Broadway batch_key
-                # semantics (sink_pipeline.ex:371-430): one sink call per
-                # (batch_key, ≤batch_size) run, and a failure nacks the
-                # whole batch + blocks the affected groups' later rows.
-                # Per-message routing keys (kafka message_key, kinesis
-                # partition_key, ...) ride in the rows and do NOT close
-                # chunks — closing on them meant one-row sink calls at
-                # high group cardinality (r11 soak, ~700 rows/s ceiling).
+                # Rows arrive sorted (group_id, lsn, idx). Each BATCH-key
+                # value keeps one open chunk that spans groups — the
+                # reference's per-batch_key Broadway batchers
+                # (sink_pipeline.ex:371-430): one sink call per
+                # (batch_key, ≤batch_size) buffer, and a failure nacks
+                # the whole chunk + blocks the affected groups' later
+                # rows.  Per-message routing keys (kafka message_key,
+                # kinesis partition_key, ...) ride in the rows and are
+                # not part of the key — keying on them meant one-row
+                # sink calls at high group cardinality (r11 soak, ~700
+                # rows/s ceiling).
                 rows = pdf.to_dict("records")
 
                 def _gkey(r):
@@ -724,14 +745,13 @@ class DeliveryEngine:
                 def flush(chunk):
                     if not chunk:
                         return
-                    # batch-level routing only: chunks are homogeneous in
-                    # batch_cols (they close on change), so chunk[0] is
-                    # safe for these.  Per-MESSAGE keys (kafka
-                    # message_key, nats subject, rabbitmq routing_key)
-                    # now mix within a chunk and must NOT be smeared
-                    # from chunk[0] — sinks read them row-first and
-                    # fall back to their config default, never to
-                    # another row's value.
+                    # batch-level routing only: a chunk holds one
+                    # batch-key value, so chunk[0] is safe for these.
+                    # Per-MESSAGE keys (kafka message_key, nats subject,
+                    # rabbitmq routing_key) mix within a chunk and must
+                    # NOT be smeared from chunk[0] — sinks read them
+                    # row-first and fall back to their config default,
+                    # never to another row's value.
                     routing = {c: chunk[0].get(c) for c in batch_cols}
                     t0 = time.perf_counter()
                     try:
@@ -754,60 +774,68 @@ class DeliveryEngine:
                             if gk is not None:
                                 failed_groups.add(gk)
 
-                chunk: list = []
-                chunk_routing = None
-                chunk_bytes = 0
+                # batch-key value → [rows, encoded bytes]
+                buffers: dict = {}
+                last_group = last_key = None
                 for r in rows:
-                    routing = tuple(r.get(c) for c in batch_cols)
+                    key = tuple(_hashable(r.get(c)) for c in batch_cols)
+                    gk = _gkey(r)
+                    # a group's unsent rows sit in one buffer: before its
+                    # next row joins another key's, send the old one, so
+                    # the group reaches the sink in commit order
+                    if (gk is not None and gk == last_group and key != last_key
+                            and last_key in buffers):
+                        flush(buffers.pop(last_key)[0])
                     # encoded bytes, not characters — a mostly-CJK payload
                     # is up to 4x its len() and would blow a sink's wire
                     # cap (e.g. pub/sub 10MB) if counted in characters
                     r_bytes = len((r.get("value") or "").encode("utf-8"))
-                    # close the chunk on routing change, count bound, OR
-                    # byte bound (sink_pipeline.ex:413-434: emit the
-                    # accumulated batch, start fresh with this row)
-                    if chunk and (
-                        routing != chunk_routing
-                        or len(chunk) >= max_batch
-                        or (max_bytes is not None and chunk_bytes + r_bytes > max_bytes)
+                    buf = buffers.get(key)
+                    # send the key's chunk at the count OR byte bound
+                    # (sink_pipeline.ex:413-434: emit the accumulated
+                    # batch, start fresh with this row)
+                    if buf and (
+                        len(buf[0]) >= max_batch
+                        or (max_bytes is not None and buf[1] + r_bytes > max_bytes)
                     ):
-                        flush(chunk)
-                        chunk = []
-                        chunk_bytes = 0
+                        flush(buffers.pop(key)[0])
+                        buf = None
                     # check AFTER flushing — the group's head may have just
                     # failed in the chunk ahead of this row
-                    gk = _gkey(r)
                     if gk is not None and gk in failed_groups:
                         statuses.append(
                             (r["commit_lsn"], r["commit_idx"], r["idempotency_key"],
                              gk, "blocked", "group blocked", int(r["deliver_count"]))
                         )
                         continue
-                    chunk_routing = routing
-                    chunk.append(r)
-                    chunk_bytes += r_bytes
-                flush(chunk)
+                    if buf is None:
+                        buf = buffers[key] = [[], 0]
+                    buf[0].append(r)
+                    buf[1] += r_bytes
+                    last_group, last_key = gk, key
+                for chunk, _ in buffers.values():
+                    flush(chunk)
                 out = _finish(pd.DataFrame(statuses, columns=status_cols), pdf)
                 if out is not None:
                     yield out
-            lat_rows = []
+            # the task's closing summary: its task row + latency histogram
+            end_rows = [("task", "", 1, 0)]
             for success in ("true", "false"):
                 counts = lat_counts[success]
                 if not any(counts):
                     continue
                 for le, c in zip((*LAT_BUCKETS_US, LAT_INF), counts):
                     if c:
-                        lat_rows.append(("lat", success, c, le))
-                lat_rows.append(("lat_agg", success, sum(counts), lat_sum_us[success]))
-            if lat_rows:
-                yield pd.DataFrame({
-                    "kind": [r[0] for r in lat_rows],
-                    "status": [r[1] for r in lat_rows],
-                    "n": [r[2] for r in lat_rows],
-                    "commit_lsn": [r[3] for r in lat_rows],
-                    "commit_idx": 0, "idempotency_key": "", "group_id": "",
-                    "deliver_count": 0, "acked_at": 0.0,
-                })
+                        end_rows.append(("lat", success, c, le))
+                end_rows.append(("lat_agg", success, sum(counts), lat_sum_us[success]))
+            yield pd.DataFrame({
+                "kind": [r[0] for r in end_rows],
+                "status": [r[1] for r in end_rows],
+                "n": [r[2] for r in end_rows],
+                "commit_lsn": [r[3] for r in end_rows],
+                "commit_idx": 0, "idempotency_key": "", "group_id": "",
+                "deliver_count": 0, "acked_at": 0.0,
+            })
             sink.close()
 
         summary_pdf = arranged.mapInPandas(deliver, SUMMARY_SCHEMA).toPandas()
@@ -829,6 +857,7 @@ class DeliveryEngine:
         n_failed = int(by_status.get("failed", 0))
         n_blocked = int(by_status.get("blocked", 0))
         n_deferred = int(by_status.get("deferred", 0))
+        n_tasks = int(summary_pdf.loc[summary_pdf["kind"] == "task", "n"].sum())
 
         # acknowledged-messages ring: per-task tails (≤ partitions×ring
         # rows through the driver), merged + trimmed to acked_ring_size
@@ -955,4 +984,5 @@ class DeliveryEngine:
             "overflow_backlog": overflow_backlog,
             "oldest_pending_age_ms": oldest_pending_age_ms,
             "delivery_latency_us": latency,
+            "delivery_tasks": n_tasks,
         }

@@ -53,7 +53,10 @@ class ConsumerMetrics:
     increment_message_deliver_{attempt,success,failure} and the
     :378-387 buffered/in-delivery gauges), fed by process_batch stats."""
 
-    COUNTERS = ("delivered", "failed", "blocked", "discarded", "shed")
+    # delivery_tasks / batches = Python delivery tasks per batch, which
+    # follow the batch's size
+    COUNTERS = ("delivered", "failed", "blocked", "discarded", "shed",
+                "delivery_tasks")
     GAUGES = ("pending",)
 
     def __init__(self):

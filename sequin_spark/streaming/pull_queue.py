@@ -19,7 +19,7 @@ messages / ``max_memory_bytes`` payload in a pandas window; overflow is
 spilled to cursor-ordered parquet chunks by a *distributed* Spark write
 (never collected), and ``receive()`` refills the window from the oldest
 chunks as it drains.  The scale path shards PullQueue instances by
-group hash (partition_count, same as DeliveryEngine); each shard's
+group hash (partition_count, the reference's store count); each shard's
 driver footprint stays O(max_pending) no matter the backlog.
 """
 

@@ -26,6 +26,18 @@ def test_counters_accumulate_and_render():
     assert 'sequin_delivery_batches_total{consumer="c2"} 1' in text
 
 
+def test_delivery_tasks_counter_renders():
+    """Tasks per batch: process_batch's delivery_tasks accumulates into
+    sequin_delivery_tasks_total beside sequin_delivery_batches_total."""
+    m = ConsumerMetrics()
+    m.record_batch("c1", {"delivered": 3, "delivery_tasks": 1})
+    m.record_batch("c1", {"delivered": 9, "delivery_tasks": 2})
+    text = prometheus_text(m)
+    assert '# TYPE sequin_delivery_tasks_total counter' in text
+    assert 'sequin_delivery_tasks_total{consumer="c1"} 3' in text
+    assert 'sequin_delivery_batches_total{consumer="c1"} 2' in text
+
+
 def test_latency_histogram_and_age_gauges_render():
     """Metric breadth (prometheus.ex:9-13,23-29,39-45): delivery-latency
     histogram per (consumer, success), oldest-pending-age and

@@ -445,6 +445,12 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
     with contextlib.redirect_stdout(buf):
         arranged.explain("formatted")
     plan = buf.getvalue()
+    # the exchange names no partition count, so adaptive execution may
+    # size it to the batch: a fixed-width repartition(n, col) plans as
+    # REPARTITION_BY_NUM, a rebalance as REBALANCE_PARTITIONS_BY_COL
+    assert _re.search(
+        r"hashpartitioning\(group_id#\d+, \d+\), REPARTITION_BY_COL\b",
+        plan), plan
     got = plan_stats(plan)
     got["sorts"] = len(_re.findall(r"\(\d+\) Sort\b", plan))
     assert got == baseline["sync"], (
