@@ -48,6 +48,14 @@ LSN_BASE = 1_000_000
 TXN_SIZE = 8
 
 
+def _ident(name: str) -> str:  # `name`, inner backticks doubled
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str_lit(value: str) -> str:  # 'value', backslashes and quotes escaped
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def eventize(
     df: DataFrame,
     table_name: str,
@@ -90,26 +98,26 @@ def eventize(
     action = (f"CASE WHEN {k} % 10 <= 5 THEN 'insert' "
               f"WHEN {k} % 10 <= 8 THEN 'update' ELSE 'delete' END")
     record = "map(" + ", ".join(
-        f"'{c}', CAST(`{c}` AS STRING)" for c in df.columns) + ")"
+        f"{_str_lit(c)}, CAST({_ident(c)} AS STRING)" for c in df.columns) + ")"
     pks = "array(" + ", ".join(
-        f"CAST(`{c}` AS STRING)" for c in pk_cols) + ")"
+        f"CAST({_ident(c)} AS STRING)" for c in pk_cols) + ")"
     group_src = ("array(" + ", ".join(
-        f"CAST(`{c}` AS STRING)" for c in group_cols) + ")") if group_cols else pks
+        f"CAST({_ident(c)} AS STRING)" for c in group_cols) + ")") if group_cols else pks
     lsn = f"CAST(({lsn_base} + FLOOR({k} / {txn_size})) AS BIGINT)"
     idx = f"CAST(({k} % {txn_size}) AS BIGINT)"
     if changed_col is not None:
-        changes = (f"CASE WHEN {action} = 'update' THEN map('{changed_col}', "
-                   f"concat('old:', CAST(`{changed_col}` AS STRING))) END")
+        changes = (f"CASE WHEN {action} = 'update' THEN map({_str_lit(changed_col)}, "
+                   f"concat('old:', CAST({_ident(changed_col)} AS STRING))) END")
     else:
         changes = (f"CASE WHEN {action} = 'update' THEN "
                    f"CAST(map() AS MAP<STRING,STRING>) END")
-    ts = f"CAST(`{ts_col}` AS TIMESTAMP)" if ts_col else "CAST(NULL AS TIMESTAMP)"
+    ts = f"CAST({_ident(ts_col)} AS TIMESTAMP)" if ts_col else "CAST(NULL AS TIMESTAMP)"
     out = df.selectExpr(
         f"{action} AS action",
         f"{record} AS record",
         f"{changes} AS changes",
-        f"'{table_schema}' AS table_schema",
-        f"'{table_name}' AS table_name",
+        f"{_str_lit(table_schema)} AS table_schema",
+        f"{_str_lit(table_name)} AS table_name",
         f"CAST({TABLE_OIDS.get(table_name, 0)} AS BIGINT) AS table_oid",
         f"{pks} AS record_pks",
         f"{lsn} AS commit_lsn",

@@ -9,12 +9,12 @@ terminal states are frozen) with progress counters
 rows_initial/processed/ingested (backfill.ex:39-41) rendered via
 Transforms.to_external (transforms.ex:513-533).
 
-The runner reuses the §2.10 backfill protocol pieces (sources/backfill.py:
-keyset_page, backfill_snapshot, PageSizeOptimizer, Backfill): each page is
-a distributed bounded read with pushed-down keyset predicates; the driver
-sees one (count, last_cursor) row per page, never row payloads. Pause
-parks the loop between pages (the reference's TableReaderServer pauses at
-page boundaries too); cancel/complete stop it.
+The runner shares the §2.10 page walker with ``run_backfill``
+(sources/backfill.py walk_pages): the driver sees one (count,
+last_cursor) row per page, nothing is cached, and each page's events are
+one keyset-range scan ``(prev_cursor, cursor]`` handed to ``out_writer``.
+Pause parks the loop between pages (the reference's TableReaderServer
+pauses at page boundaries too); cancel/complete stop it.
 """
 
 from __future__ import annotations
@@ -30,7 +30,9 @@ from sequin_spark.sources.backfill import (
     Backfill,
     PageSizeOptimizer,
     backfill_snapshot,
-    keyset_page,
+    cursor_columns,
+    keyset_range,
+    walk_pages,
 )
 
 # backfill.ex:92-98 @state_transitions
@@ -122,6 +124,7 @@ class BackfillJob:
         self._thread.join(timeout)
 
     def _run(self) -> None:
+        pages = walk_pages(self._df, self._cursor_cols, self._opt)
         try:
             while True:
                 st = self.state
@@ -130,36 +133,25 @@ class BackfillJob:
                     continue
                 if st != "active":
                     return
-                t0 = time.time()
-                page = keyset_page(
-                    self._df, self._cursor_cols, self._bf.cursor, self._opt.size
-                ).cache()
-                last = page.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max(
-                        F.struct(*[F.col(c) for c in self._cursor_cols])
-                    ).alias("last_cursor"),
-                ).collect()[0]
-                if not last["n"]:
-                    page.unpersist()
+                page = next(pages, None)
+                if page is None:
                     with self._lock:
                         if self._bf.state == "active":
                             self._bf.state = "completed"
                             self.completed_at = self.updated_at = _now()
                     return
-                snap = backfill_snapshot(page, self.table_ref, self._pk_cols)
-                ingested = int(last["n"])
+                n, cursor = page
+                ingested = n
                 if self._out_writer is not None:
+                    rows = keyset_range(self._df, self._cursor_cols,
+                                        self._bf.cursor, cursor)
+                    snap = backfill_snapshot(rows, self.table_ref, self._pk_cols)
                     ingested = self._out_writer(snap) or ingested
-                page.unpersist()
                 with self._lock:
-                    self._bf.rows_processed_count += int(last["n"])
+                    self._bf.rows_processed_count += n
                     self._bf.rows_ingested_count += ingested
-                    self._bf.cursor = [
-                        last["last_cursor"][c] for c in self._cursor_cols
-                    ]
+                    self._bf.cursor = cursor
                     self.updated_at = _now()
-                self._opt.record(self._opt.size, (time.time() - t0) * 1000)
                 if self._throttle_ms:
                     time.sleep(self._throttle_ms / 1000)
         except Exception as e:  # noqa: BLE001 — job failure → failed state
@@ -239,22 +231,22 @@ class BackfillManager:
         unique index → "already has an active backfill").
 
         ``sort_column`` + ``start_position`` select a PARTIAL backfill
-        (yaml_loader_test.exs:2582-2643): pages keyset over the given
-        column starting strictly after start_position instead of the
-        PK from the beginning; an unknown sort_column is rejected
-        before any job starts."""
+        (yaml_loader_test.exs:2582-2643): pages keyset over
+        ``cursor_columns(pks, sort_column)`` — PKs break sort-value ties
+        — across the rows with ``sort_column > start_position``; an
+        unknown sort_column is rejected before any job starts."""
         if not table_ref:
             raise ValueError("Table reference is required")
         try:
             df, pk_cols = self._resolver(table_ref)
         except KeyError:
             raise ValueError(f"Table {table_ref} not found") from None
-        cursor_cols = None
-        if sort_column is not None:
-            if sort_column not in df.columns:
-                raise ValueError(
-                    f"Column {sort_column} not found on table {table_ref}")
-            cursor_cols = [sort_column]
+        if sort_column is not None and sort_column not in df.columns:
+            raise ValueError(
+                f"Column {sort_column} not found on table {table_ref}")
+        cursor_cols = cursor_columns(pk_cols, sort_column)
+        if start_position is not None:
+            df = df.filter(F.col(cursor_cols[0]) > F.lit(start_position))
         with self._lock:
             for j in self._jobs.values():
                 if (
@@ -270,10 +262,6 @@ class BackfillManager:
                 out_writer=self._out_writer,
                 throttle_ms=self._throttle_ms,
             )
-            if start_position is not None:
-                # keyset_page treats the cursor as exclusive: the
-                # partial backfill resumes strictly after the position
-                job._bf.cursor = [start_position]
             self._jobs[job.id] = job
         return job.start()
 

@@ -10,14 +10,17 @@ Reference protocol (SURVEY §2.10; lib/sequin/runtime/table_reader.ex):
    before the fence are dropped (CDC wins — message_handler.ex:130-148);
 3. snapshot rows enter the stream as ``action='read'`` events.
 
-Spark mapping: (1) is a filter+sort+limit that pushes down to
-parquet/JDBC (on JDBC, partition the read by keyset ranges so 1000
-executors scan disjoint slices); (2) is a left_anti join against the
-CDC keys at/below the fence LSN (broadcast — the per-batch CDC key set
-is small); (3) is a union into the canonical stream.
+Spark mapping: (1) splits in two — a page walk that only finds each
+page's last cursor (one pushed-down ``agg`` row per page), then the
+events as ONE keyset-range scan ``lo < cursor <= last`` with no sort and
+no limit; (2) is a left_anti join against the CDC keys at/below the
+fence LSN (broadcast — that key set is small), run once on the range;
+(3) is a union into the canonical stream.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,12 +37,6 @@ def cursor_columns(pk_cols: list[str],
     if sort_col is None:
         return list(pk_cols)
     return [sort_col] + [c for c in pk_cols if c != sort_col]
-
-
-def cursor_from_row(cursor_cols: list[str], row) -> list:
-    """Cursor value from a page's last row (keyset_cursor.ex
-    cursor_from_result): positional values in cursor-column order."""
-    return [row[c] for c in cursor_cols]
 
 
 def keyset_predicate(cursor_cols: list[str], cursor_vals: list) -> Column:
@@ -72,6 +69,38 @@ def keyset_page(
     if cursor_vals is not None:
         out = out.filter(keyset_predicate(cursor_cols, cursor_vals))
     return out.orderBy(*[F.col(c) for c in cursor_cols]).limit(page_size)
+
+
+def keyset_range(df: DataFrame, cursor_cols: list[str], lo: list | None, hi: list) -> DataFrame:
+    """Rows with ``lo < cursor <= hi`` (``lo=None``: from the start): the
+    pages a walk stepped over, as one filter with no sort and no limit."""
+    pred = ~keyset_predicate(cursor_cols, hi)
+    if lo is not None:
+        pred = keyset_predicate(cursor_cols, lo) & pred
+    return df.dropna(subset=cursor_cols).filter(pred)
+
+
+def walk_pages(df: DataFrame, cursor_cols: list[str], opt: "PageSizeOptimizer"):
+    """Page walker: yield ``(n, last_cursor)`` for each non-empty keyset
+    page of ``df``, sized by ``opt`` (AIMD), with one
+    ``agg(count, max(struct(cursor)))`` job per page — the page is in
+    cursor order, so the struct max IS its last cursor.  Nothing is
+    cached; callers read the rows as ``keyset_range`` between cursors."""
+    # NULL never compares greater than a cursor, so only the first page
+    # could reach a NULL-cursor row: such rows are neither paged nor emitted
+    df = df.dropna(subset=cursor_cols)
+    cursor = None
+    while True:
+        t0 = time.time()
+        last = keyset_page(df, cursor_cols, cursor, opt.size).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.struct(*[F.col(c) for c in cursor_cols])).alias("last_cursor"),
+        ).collect()[0]
+        if not last["n"]:
+            return
+        opt.record(opt.size, (time.time() - t0) * 1000)
+        cursor = [last["last_cursor"][c] for c in cursor_cols]
+        yield int(last["n"]), cursor
 
 
 def backfill_snapshot(df: DataFrame, table_name: str, pk_cols: list[str], table_schema: str = "public") -> DataFrame:
@@ -169,27 +198,19 @@ def run_backfill(
     pk_prescan: bool = False,
     source_path: str | None = None,
 ):
-    """Full backfill protocol (§2.10): keyset-paginate the snapshot,
-    fence-merge each page against concurrent CDC, emit `read` events,
-    AIMD-tune the page size, track progress. Returns (Backfill, events).
-
-    Driver-side loop over pages mirrors the reference's TableReaderServer;
-    each page is a distributed bounded read with pushed-down predicates.
-    The cursor advances via ``agg(count, max(struct(cursor)))`` — the
-    driver only ever sees ONE row per page (count + last cursor), never
-    the page's rows; the page is sorted by the cursor columns, so the
-    lexicographic struct max IS the last row's cursor.
+    """Full backfill protocol (§2.10): walk the snapshot's keyset pages
+    (``walk_pages``: AIMD sizing, progress counters, state machine), then
+    return (Backfill, events) — the `read` events of everything walked
+    as ONE keyset-range scan, fence-merged once against concurrent CDC
+    (None when the walk found no rows).  ``max_pages`` stops the walk
+    early; the backfill then stays ``active`` at its last cursor.
 
     ``pk_prescan=True`` is fetch_batch_pks parity (table_reader.ex:
-    161-203 with select_only_pk_and_cursor_columns): page over a
-    PK+cursor-only projection — the scan reads just those columns
-    (column pruning reaches parquet's ReadSchema / JDBC's SELECT list)
-    — then fetch the full rows for the page by a broadcast semi-join on
-    the PK set. Wide tables page ~10-100× cheaper; the full-row read
-    touches exactly one page's PKs.
+    161-203 with select_only_pk_and_cursor_columns): the walk scans only
+    the PK+cursor columns (column pruning reaches parquet's ReadSchema /
+    JDBC's SELECT list), so wide tables page ~10-100× cheaper; the full
+    rows are read once, by the range scan.
     """
-    import time as _time
-
     from sequin_spark.sources.fast_count import count_or_estimate
 
     cursor_cols = cursor_cols or pk_cols
@@ -198,42 +219,23 @@ def run_backfill(
     bf = Backfill(table_name, cursor_cols,
                   rows_initial_count=count_or_estimate(df, source_path))
     opt = PageSizeOptimizer(initial=initial_page_size)
-    prescan_cols = list(dict.fromkeys([*cursor_cols, *pk_cols]))
-    pages = []
-    n_pages = 0
-    while bf.state == "active":
-        t0 = _time.time()
-        if pk_prescan:
-            keys = keyset_page(df.select(*prescan_cols), cursor_cols, bf.cursor, opt.size)
-            keys = keys.cache()
-            page = df.join(broadcast(keys.select(*pk_cols)), pk_cols, "left_semi")
-        else:
-            page = keyset_page(df, cursor_cols, bf.cursor, opt.size).cache()
-            keys = page
-        last = keys.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.struct(*[F.col(c) for c in cursor_cols])).alias("last_cursor"),
-        ).collect()[0]
-        elapsed_ms = (_time.time() - t0) * 1000
-        if not last["n"]:
-            bf.transition("completed")
-            keys.unpersist()
+    keys = df.select(*dict.fromkeys([*cursor_cols, *pk_cols])) if pk_prescan else df
+    for n_pages, (n, cursor) in enumerate(walk_pages(keys, cursor_cols, opt), 1):
+        bf.rows_processed_count += n
+        bf.cursor = cursor
+        if n_pages == max_pages:
             break
-        bf.rows_processed_count += int(last["n"])
-        snap = backfill_snapshot(page, table_name, pk_cols)
-        if cdc_events is not None:
-            snap = fence_merge(snap, cdc_events, fence_lsn)
-        pages.append(snap)
-        bf.rows_ingested_count += snap.count()
-        keys.unpersist()
-        bf.cursor = [last["last_cursor"][c] for c in cursor_cols]
-        opt.record(opt.size, elapsed_ms)
-        n_pages += 1
-        if max_pages and n_pages >= max_pages:
-            break
-    events = pages[0] if pages else None
-    for p in pages[1:]:
-        events = events.unionByName(p)
+    else:
+        bf.transition("completed")
+    if bf.cursor is None:
+        return bf, None
+    events = backfill_snapshot(
+        keyset_range(df, cursor_cols, None, bf.cursor), table_name, pk_cols)
+    if cdc_events is None:
+        bf.rows_ingested_count = bf.rows_processed_count
+    else:
+        events = fence_merge(events, cdc_events, fence_lsn)
+        bf.rows_ingested_count = events.count()
     return bf, events
 
 
@@ -246,10 +248,8 @@ class PageSizeOptimizer:
         self.size = initial
         self.max_timeout_ms = max_timeout_ms
         self.max_size = max_size
-        self.history: list[tuple[int, float]] = []
 
     def record(self, page_size: int, elapsed_ms: float) -> None:
-        self.history = (self.history + [(page_size, elapsed_ms)])[-20:]
         if elapsed_ms < self.max_timeout_ms * 0.5:
             self.size = min(self.max_size, int(self.size * 1.5))
         elif elapsed_ms > self.max_timeout_ms:

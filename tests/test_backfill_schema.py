@@ -116,13 +116,14 @@ def test_cursor_columns_no_sort_column():
 
 
 def test_cursor_round_trip_pages(spark):
-    """cursor_from_row feeds the next page's keyset predicate: walking
-    pages by (sort_col, pk) covers every row exactly once even with
-    duplicate sort values (the reason PKs tail the cursor)."""
+    """Each walked page's last cursor feeds the next page's keyset
+    predicate: walking pages by (sort_col, pk), each read back as its
+    keyset range, covers every row exactly once even with duplicate
+    sort values (the reason PKs tail the cursor)."""
     from sequin_spark.sources.backfill import (
         cursor_columns,
-        cursor_from_row,
-        keyset_page,
+        keyset_range,
+        walk_pages,
     )
 
     # duplicate updated_at values across ids — sort alone is ambiguous
@@ -131,12 +132,31 @@ def test_cursor_round_trip_pages(spark):
         "updated_at long, id long",
     )
     cols = cursor_columns(["id"], "updated_at")
-    seen, cursor = [], None
-    for _ in range(50):
-        page = keyset_page(df, cols, cursor, 7).collect()
-        if not page:
-            break
+    seen, prev = [], None
+    for n, cursor in walk_pages(df, cols, PageSizeOptimizer(initial=7, max_size=7)):
+        page = keyset_range(df, cols, prev, cursor).collect()
+        assert len(page) == n
         seen += [r["id"] for r in page]
-        cursor = cursor_from_row(cols, page[-1])
+        prev = cursor
     assert sorted(seen) == sorted(r["id"] for r in df.collect())
     assert len(seen) == len(set(seen))  # exactly once
+
+
+def test_eventize_escapes_identifiers_and_literals(spark):
+    """Column, table and schema names reach eventize's one parsed
+    projection escaped: backticks doubled inside quoted identifiers,
+    quotes doubled and backslashes escaped inside string literals."""
+    from sequin_spark.cdc import eventize
+
+    name = "we'ird`na`me"
+    df = spark.createDataFrame([(1, "a"), (6, "b")], ["id", name])
+    ev = eventize(df, "o'brien\\t", ["id"], order_expr="id",
+                  table_schema="sch'ema", changed_col=name, group_cols=[name])
+    rows = {r.record["id"]: r for r in ev.collect()}
+    assert rows["1"].record == {"id": "1", name: "a"}
+    assert rows["1"].action == "insert" and rows["1"].changes is None
+    assert rows["6"].action == "update"
+    assert rows["6"].changes == {name: "old:b"}
+    assert rows["6"].group_id == "b"
+    assert {(r.table_schema, r.table_name) for r in rows.values()} == {
+        ("sch'ema", "o'brien\\t")}

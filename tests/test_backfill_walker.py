@@ -1,0 +1,226 @@
+"""The backfill page walker and the keyset-range events it feeds.
+
+``run_backfill`` and ``BackfillJob`` walk keyset pages only to find
+cursor boundaries; the events are one range scan between cursors.  These
+tests pin that the range is exactly the union of the pages the walk
+stepped over, that its plan re-sorts nothing, that the walk costs one
+Spark job per page, one rule for NULL cursors, and that a partial
+backfill keysets over ``(sort_column, pk)`` so sort-value ties survive a
+page boundary.
+"""
+
+import contextlib
+import io
+import time
+import uuid
+
+import pytest
+
+from sequin_spark.plans.backfill_api import BackfillManager
+from sequin_spark.sources import backfill
+from sequin_spark.sources.backfill import (
+    backfill_snapshot,
+    cursor_columns,
+    fence_merge,
+    keyset_page,
+    run_backfill,
+)
+
+N_ROWS = 60
+
+
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    """A 60-row single-file parquet table; ``s`` has 10 values, so sort
+    ties straddle page boundaries."""
+    path = str(tmp_path_factory.mktemp("walker") / "t.parquet")
+    (spark.range(N_ROWS)
+     .selectExpr("id", "id % 10 AS s", "concat('v-', id) AS v")
+     .coalesce(1).write.parquet(path))
+    return path, spark.read.parquet(path)
+
+
+@pytest.fixture()
+def walked(monkeypatch):
+    """Record every ``(n, cursor)`` page the walker yields."""
+    pages = []
+    real = backfill.walk_pages
+
+    def walk(df, cursor_cols, opt):
+        for n, cursor in real(df, cursor_cols, opt):
+            pages.append((n, list(cursor)))
+            yield n, cursor
+
+    monkeypatch.setattr(backfill, "walk_pages", walk)
+    return pages
+
+
+def _cdc(spark, fence):
+    """CDC touches ids 0..9 at/below the fence and 10..19 after it."""
+    return spark.createDataFrame(
+        [(0, str(i), fence - 1 if i < 10 else fence + 1) for i in range(20)],
+        "table_oid long, group_id string, commit_lsn long")
+
+
+def _event_rows(df) -> list:
+    return [(r.group_id, r.idempotency_key, tuple(sorted(r.record.items())))
+            for r in df.select("group_id", "idempotency_key", "record").collect()]
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+CASES = {
+    "pk": dict(cursor_cols=None),
+    "sort_pk": dict(cursor_cols=cursor_columns(["id"], "s")),
+    "pk_prescan": dict(cursor_cols=cursor_columns(["id"], "s"), pk_prescan=True),
+    "max_pages": dict(cursor_cols=cursor_columns(["id"], "s"), max_pages=2),
+    "fence": dict(cursor_cols=cursor_columns(["id"], "s"), fence=True),
+}
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_range_events_equal_union_of_walked_pages(spark, table, walked, case):
+    """The one range scan emits, as a set of (group_id, idempotency_key,
+    record), exactly the union of the pages rebuilt here with
+    ``keyset_page`` from the recorded cursors — each row once."""
+    _, df = table
+    kw = dict(CASES[case])
+    cdc = _cdc(spark, 100) if kw.pop("fence", False) else None
+    cols = kw.get("cursor_cols") or ["id"]
+    bf, events = run_backfill(spark, df, "t", ["id"], cdc_events=cdc,
+                              fence_lsn=100, initial_page_size=7, **kw)
+
+    assert len(walked) >= 2
+    prev, pages = None, []
+    for n, cursor in walked:
+        pages.append(keyset_page(df, cols, prev, n))
+        prev = cursor
+    expected = backfill_snapshot(pages[0], "t", ["id"])
+    for p in pages[1:]:
+        expected = expected.unionByName(backfill_snapshot(p, "t", ["id"]))
+    if cdc is not None:
+        expected = fence_merge(expected, cdc, 100)
+
+    got = _event_rows(events)
+    assert len(got) == len(set(got))
+    assert set(got) == set(_event_rows(expected))
+    assert bf.rows_processed_count == sum(n for n, _ in walked)
+    assert bf.rows_ingested_count == len(got)
+    assert bf.cursor == walked[-1][1]
+    if case == "max_pages":
+        assert len(walked) == 2 and bf.state == "active"
+        assert bf.rows_processed_count < N_ROWS
+    else:
+        assert bf.state == "completed"
+        assert bf.rows_processed_count == N_ROWS
+    if cdc is not None:
+        assert len(got) == N_ROWS - 10
+
+
+@pytest.mark.parametrize("fence", [False, True])
+def test_range_events_plan_has_no_sort_or_limit(spark, table, fence):
+    """The events are one pushed-down scan: nothing re-sorts or limits
+    the pages the walk found."""
+    _, df = table
+    bf, events = run_backfill(
+        spark, df, "t", ["id"], cursor_cols=cursor_columns(["id"], "s"),
+        cdc_events=_cdc(spark, 100) if fence else None, fence_lsn=100,
+        initial_page_size=7)
+    plan = _plan(events)
+    for node in ("Sort", "GlobalLimit", "TakeOrderedAndProject"):
+        assert node not in plan, plan
+    assert "PushedFilters: [" in plan and "LessThanOrEqual(s," in plan, plan
+
+
+def test_paging_runs_one_job_per_page(spark, table, walked):
+    """One Spark job per walked page plus the final empty one, and no
+    count() job when there is no fence (rows_ingested = rows_processed).
+    The table is one parquet split, so a page's agg needs no shuffle."""
+    path, df = table
+    sc = spark.sparkContext
+    group = "walker-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "backfill page walk")
+    try:
+        bf, _ = run_backfill(spark, df, "t", ["id"], initial_page_size=7,
+                             source_path=path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert bf.state == "completed"
+    assert bf.rows_ingested_count == bf.rows_processed_count == N_ROWS
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == len(walked) + 1
+
+
+def test_null_cursor_rows_are_neither_paged_nor_emitted(spark):
+    """One rule for NULL sort values, wherever the page boundaries fall:
+    a row whose cursor is NULL is not counted and not emitted.  (Before,
+    such rows leaked in only when they sorted onto the first page.)"""
+    df = spark.createDataFrame(
+        [(i, None if i % 4 == 0 else i % 5) for i in range(40)],
+        "id long, s long")
+    cols = cursor_columns(["id"], "s")
+    for size in (3, 1000):
+        bf, events = run_backfill(spark, df, "t", ["id"], cursor_cols=cols,
+                                  initial_page_size=size)
+        ids = sorted(int(r.group_id) for r in events.select("group_id").collect())
+        assert ids == [i for i in range(40) if i % 4], size
+        assert bf.rows_processed_count == bf.rows_ingested_count == 30
+
+
+def _wait_completed(job, timeout=60.0):
+    deadline = time.time() + timeout
+    while job.state == "active" and time.time() < deadline:
+        time.sleep(0.05)
+    assert job.state == "completed", job.to_external()
+
+
+def test_partial_backfill_keeps_sort_ties_across_pages(spark):
+    """A sort_column backfill pages on (sort_column, pk): with 30 rows
+    over 10 sort values and 2-row first pages, every row arrives exactly
+    once (paging on the sort column alone skipped the tied rows past a
+    page boundary: 27 of 30).  start_position still starts strictly
+    after the given sort value."""
+    df = spark.range(30).selectExpr("id", "id % 10 AS s").cache()
+    df.count()
+    received = []
+    mgr = BackfillManager(
+        lambda ref: (df, ["id"]), initial_page_size=2,
+        out_writer=lambda snap: received.extend(
+            int(r.group_id) for r in snap.select("group_id").collect()))
+    try:
+        job = mgr.create("sink", "public.t", sort_column="s")
+        _wait_completed(job)
+        assert sorted(received) == list(range(30))
+        ext = job.to_external()
+        assert ext["rows_processed_count"] == ext["rows_ingested_count"] == 30
+        assert ext["sort_column"] == "s"
+
+        received.clear()
+        job = mgr.create("sink", "public.t", sort_column="s", start_position=6)
+        _wait_completed(job)
+        assert sorted(received) == [i for i in range(30) if i % 10 > 6]
+        assert job.to_external()["rows_processed_count"] == 9
+    finally:
+        df.unpersist()
+
+
+def test_backfill_job_writes_each_page_as_its_range(spark):
+    """``BackfillJob`` hands ``out_writer`` one range per page: the
+    ranges are disjoint, in cursor order, and cover the table."""
+    df = spark.range(50).selectExpr("id", "id % 7 AS s")
+    pages = []
+    mgr = BackfillManager(
+        lambda ref: (df, ["id"]), initial_page_size=4,
+        out_writer=lambda snap: pages.append(sorted(
+            (int(r.record["s"]), int(r.group_id))
+            for r in snap.select("group_id", "record").collect())))
+    job = mgr.create("sink", "public.t", sort_column="s")
+    _wait_completed(job)
+    flat = [k for p in pages for k in p]
+    assert len(pages) >= 3 and all(pages)
+    assert flat == sorted((i % 7, i) for i in range(50))
