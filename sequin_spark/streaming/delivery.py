@@ -8,20 +8,22 @@ Semantics implemented (citations into the reference):
 - retry with exponential backoff 1s→3min and deliver_count tracking
   (slot_message_store.ex:346-357; time.ex:101);
 - max_retry_count exceeded → discard table (slot_message_store.ex:1177-1190);
-- idempotency ledger: delivered cursors filtered out on redelivery
+- idempotency ledger: delivered identities filtered out on redelivery
   (message_ledgers.ex:65-99, sink_pipeline.ex:552-591);
 - replay dedup by (commit_lsn, commit_idx) (slot_message_store_state.ex:98).
 
-Execution model: the micro-batch is repartitioned by group hash into
-as many tasks as its bytes need (arrange_for_delivery) and sorted by
-(group_id, commit_lsn, commit_idx); delivery runs executor-side in
-mapInPandas (one sink client per task, one open chunk per batch-key
-value). Bookkeeping is ALSO executor-side: each
-task appends its delivered cursors straight to the ledger directory
-and its failed/blocked rows (payload included) to a per-batch failures
-directory, then yields only BOUNDED summary rows — per-status counts
-plus a ≤ring_size tail of acked rows per task. Nothing O(batch-rows)
-ever crosses the driver: driver traffic is O(partitions + failures).
+Execution model, three steps per micro-batch (process_batch):
+
+- prepare (driver): new rows, due pending retries and re-ingested
+  overflow, arranged by group hash and (group, lsn, idx)
+  (arrange_for_delivery); the trimmed ledger identities, read with
+  pyarrow, and the groups blocked behind a backing-off pending head.
+- deliver (one mapInPandas job over deliver_partition): the one place
+  rows are skipped or held.  Each task writes its own ledger and
+  failures files and yields only BOUNDED summary rows, so nothing
+  O(batch-rows) crosses the driver.
+- finish (driver): ledger compaction and trim, acked ring, pending,
+  discards and overflow reap.
 
 Scale note (100 TB): the ledger and pending-retry state are the only
 driver-coordinated pieces — on a real cluster state_dir is shared
@@ -34,7 +36,7 @@ at-least-once → exactly-once-effect contract.
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 import shutil
 import time
@@ -42,6 +44,7 @@ import uuid
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -138,6 +141,10 @@ class DeliveryEngine:
         self.partition_count = partition_count
         self.max_retry_count = max_retry_count
         self.routing_cols = tuple(routing_cols)
+        # the columns a row carries into the delivery task
+        self.delivery_cols = ["group_id", "commit_lsn", "commit_idx",
+                              "idempotency_key", "key", "value",
+                              *self.routing_cols]
         # chunk-bounding subset of routing_cols: the reference's Broadway
         # batch_key (sink_pipeline.ex:371-430).  Per-message routing keys
         # (kafka message_key, kinesis partition_key, ...) must NOT close
@@ -167,8 +174,8 @@ class DeliveryEngine:
         # set at the verified high watermark). With checkpoint-commit=ack,
         # a restarted stream replays at most the last uncommitted
         # micro-batch, so identities delivered ≥N batches ago can never be
-        # redelivered — keeping them makes the per-batch broadcast
-        # anti-join side grow with stream LIFETIME (the r3 latency
+        # redelivered — keeping them makes the identity set each delivery
+        # task checks grow with stream LIFETIME (the r3 latency
         # regression: 1.35M-row ledger after 35s at 50k rows/s). None
         # disables trimming (batch-replay semantics: run_batch callers may
         # legitimately replay arbitrarily old data).
@@ -248,12 +255,12 @@ class DeliveryEngine:
         return out
 
     def _spill_overflow(self, df: DataFrame, batch_id: int) -> int:
-        """Append the batch's (already ledger-anti-joined) new rows to
-        the overflow spill as one parquet dir.  Batch REPLAYS
-        (crash-before-checkpoint) append a second copy of the
-        same identities — harmless: the ledger/adjacent dedup drops
-        already-delivered copies at delivery time, exactly like source
-        redelivery."""
+        """Append the batch's new rows to the overflow spill as one
+        parquet dir.  They are not yet checked against the ledger, and
+        batch REPLAYS (crash-before-checkpoint) append a second copy of
+        the same identities — harmless: the delivery task's ledger and
+        adjacent-duplicate checks drop already-delivered copies when the
+        spill is re-ingested, exactly like source redelivery."""
         tmp = os.path.join(self.overflow_dir,
                            f"_{time.time_ns():020d}_{batch_id}")
         df.write.mode("overwrite").parquet(tmp)
@@ -272,10 +279,10 @@ class DeliveryEngine:
         """Oldest-first re-ingest of spilled batches up to ``headroom``
         rows (whole-dir granularity; at least one dir so an oversized
         spill can never stall the drain).  The dirs are NOT deleted
-        here — deletion happens at the END of process_batch, after the
-        delivery pass and state writes, so a crash mid-batch replays
-        them and the ledger dedup resolves the copies (the same
-        crash-window contract as the failures dir)."""
+        here — deletion happens in finish(), after the delivery pass
+        and state writes, so a crash mid-batch replays them and the
+        task's ledger check drops the copies (the same crash-window
+        contract as the failures dir)."""
         dirs = self._overflow_dirs()
         if not dirs:
             return None, 0, []
@@ -305,7 +312,7 @@ class DeliveryEngine:
         if os.path.isdir(self.ledger_dir) and any(
                 not f.startswith("_") for f in os.listdir(self.ledger_dir)):
             # explicit schema: the ledger layout is fixed (IDENTITY), and
-            # schema inference costs a footer-read job per micro-batch.
+            # schema inference costs a footer-read job.
             # recursiveFileLookup also reads ledger files that older
             # versions wrote into subdirectories (with an extra group_id
             # column the explicit schema drops), so they still dedupe
@@ -314,19 +321,29 @@ class DeliveryEngine:
             ).option("recursiveFileLookup", "true").parquet(self.ledger_dir)
         return None
 
-    def _ledger_for_antijoin(self, spark: SparkSession) -> DataFrame | None:
-        """The ledger rows that can still match incoming rows: under
-        trimming, only identities newer than the watermark (plus
-        lsn==0 backfill-read identities, which carry no cursor and are
-        never trimmed). The lsn predicate prunes parquet row groups, so
-        the broadcast side stays O(retention window), not O(lifetime)."""
-        ledger = self.read_ledger(spark)
-        if ledger is None or self._ledger_trim_lsn <= 0:
-            return ledger
-        return ledger.filter(
-            (F.col("commit_lsn") >= self._ledger_trim_lsn)
-            | (F.col("commit_lsn") == 0)
-        )
+    def _ledger_identities(self) -> frozenset:
+        """The delivered identities that can still match incoming rows,
+        read with pyarrow on the driver (no Spark job): the files
+        read_ledger reads, subdirectories included, and under trimming
+        only identities at or above the watermark plus lsn==0
+        backfill-read identities, which carry no cursor and are never
+        trimmed. The trim keeps the set O(retention window), not
+        O(lifetime)."""
+        ids: set = set()
+        for root, dirs, names in os.walk(self.ledger_dir):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for name in names:
+                if name.startswith(("_", ".")):
+                    continue
+                t = pq.read_table(os.path.join(root, name),
+                                  columns=IDENTITY).drop_null()
+                if self._ledger_trim_lsn > 0:
+                    lsn = t["commit_lsn"]
+                    t = t.filter(pc.or_(
+                        pc.greater_equal(lsn, self._ledger_trim_lsn),
+                        pc.equal(lsn, 0)))
+                ids.update(zip(*(t[c].to_numpy().tolist() for c in IDENTITY)))
+        return frozenset(ids)
 
     @property
     def acked_ring_path(self) -> str:
@@ -349,7 +366,7 @@ class DeliveryEngine:
 
     def _compact_ledger(self) -> None:
         """Merge small per-batch ledger files once they pile up — keeps
-        the per-batch broadcast read O(1) files instead of O(batches)."""
+        the per-batch identity read O(1) files instead of O(batches)."""
         if not os.path.isdir(self.ledger_dir):
             return
         files = [os.path.join(self.ledger_dir, f) for f in os.listdir(self.ledger_dir)]
@@ -361,8 +378,6 @@ class DeliveryEngine:
             return
         merged = pa.concat_tables([pq.read_table(f) for f in files])
         if self._ledger_trim_lsn > 0:
-            import pyarrow.compute as pc
-
             lsn = merged["commit_lsn"]
             merged = merged.filter(
                 pc.or_(pc.greater_equal(lsn, self._ledger_trim_lsn),
@@ -460,14 +475,29 @@ class DeliveryEngine:
             F.col("deliver_count").desc(),
         )
 
-    # --- the foreachBatch body -------------------------------------------
+    # --- the foreachBatch body: prepare → deliver → finish ---------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
+        prep = self.prepare(batch_df, batch_id)
+        task = functools.partial(
+            deliver_partition, batch_id=batch_id,
+            sink_type=self.sink_type, sink_config=dict(self.sink_config),
+            batch_cols=self.batch_cols, batch_size=self.batch_size,
+            batch_bytes=self.batch_bytes, delivery_cols=self.delivery_cols,
+            ledger_dir=self.ledger_dir, fail_dir=self.failures_dir(batch_id),
+            ring_size=self.acked_ring_size,
+            ledger=prep["ledger"], blocked=prep["blocked"])
+        summary_pdf = prep["arranged"].mapInPandas(
+            task, SUMMARY_SCHEMA).toPandas()
+        return self.finish(summary_pdf, prep, batch_id)
+
+    def prepare(self, batch_df: DataFrame, batch_id: int) -> dict:
+        """Driver side of a micro-batch, ahead of the delivery job: the
+        arranged frame (new rows, due pending retries, re-ingested
+        overflow), the ledger identities the task drops, the blocked
+        groups whose rows it defers, and the state finish() needs."""
         spark = batch_df.sparkSession
         now = time.time()
-        delivery_cols = [
-            "group_id", "commit_lsn", "commit_idx", "idempotency_key",
-            "key", "value", *self.routing_cols,
-        ]
+        delivery_cols = self.delivery_cols
 
         # NOTE: no dropDuplicates here — identity dedup is fused into the
         # group-hash repartition below. Duplicate identities are the same
@@ -479,21 +509,6 @@ class DeliveryEngine:
         new_rows = batch_df.select(
             *[F.col(c) for c in delivery_cols]
         ).withColumn("deliver_count", F.lit(0))
-
-        # idempotency ledger anti-join (broadcast — bounded by the trim
-        # watermark under streaming)
-        # No dropDuplicates on the build side: left_anti only probes for
-        # existence, so ledger duplicates (task-retry double-writes) are
-        # harmless — deduping them cost a full shuffle per micro-batch
-        # (~0.3 s fixed at 50k rows/s, the largest addBatch overhead)
-        ledger = self._ledger_for_antijoin(spark)
-
-        def ledger_antijoin(df: DataFrame) -> DataFrame:
-            if ledger is None:
-                return df
-            return df.join(F.broadcast(ledger.select(*IDENTITY)),
-                           IDENTITY, "left_anti")
-        new_rows = ledger_antijoin(new_rows)
 
         # pending retries: due ones re-enter delivery; not-due (still
         # backing off) block their whole group. Messages deferred by
@@ -535,11 +550,7 @@ class DeliveryEngine:
                     re_df, reingested, overflow_taken = \
                         self._reingest_overflow(spark, headroom)
                     if re_df is not None:
-                        # re-ingested rows re-run the ledger anti-join:
-                        # a spill REPLAY copy (or a crash after delivery
-                        # but before dir reap) must not deliver twice
-                        new_rows = ledger_antijoin(
-                            re_df.select(new_rows.columns))
+                        new_rows = re_df.select(new_rows.columns)
                 # taken dirs are still on disk (deleted post-delivery),
                 # so the live backlog is everything minus this batch's
                 # re-ingest
@@ -547,8 +558,7 @@ class DeliveryEngine:
                     sum(n for _, n in self._overflow_dirs()) - reingested)
         elif pending is not None and len(pending) >= self.max_pending:
             # discard_on_full: count-and-drop, recorded as shed
-            shed_df = new_rows.count()
-            shed = int(shed_df)
+            shed = int(new_rows.count())
             new_rows = new_rows.limit(0)
 
         blocked_groups: set[str] = set()
@@ -566,279 +576,26 @@ class DeliveryEngine:
                         spark, due_free[delivery_cols + ["deliver_count"]],
                         "due_free"))
 
-        if blocked_groups:
-            # defer (don't drop) new messages behind a backoff-blocked
-            # head — flagged via a broadcast join and spilled WITH their
-            # payloads by the deliver tasks (status 'deferred', same
-            # failures dir as failed/blocked rows), so no event payload
-            # rides through the driver
-            blocked_df = self._scalable_local_df(
-                spark,
-                pd.DataFrame({"group_id": sorted(blocked_groups)}),
-                "blocked_groups",
-            ).withColumn("_deferred", F.lit(True))
-            new_rows = new_rows.join(F.broadcast(blocked_df), "group_id", "left")
-            new_rows = new_rows.withColumn(
-                "_deferred", F.coalesce(F.col("_deferred"), F.lit(False))
-            )
-        else:
-            new_rows = new_rows.withColumn("_deferred", F.lit(False))
+        return {
+            "arranged": self.arrange_for_delivery(new_rows),
+            "ledger": self._ledger_identities(),
+            "blocked": frozenset(blocked_groups),
+            "now": now, "prev_seen": prev_seen,
+            "carry_pending": carry_pending,
+            "shed": shed, "spilled": spilled, "reingested": reingested,
+            "overflow_taken": overflow_taken,
+            "overflow_backlog": overflow_backlog,
+        }
 
-        arranged = self.arrange_for_delivery(new_rows)
-
-        sink_type, sink_config = self.sink_type, dict(self.sink_config)
-        max_batch = self.batch_size
-        batch_cols = list(self.batch_cols)
-        max_bytes = self.batch_bytes
-        ledger_dir, fail_dir = self.ledger_dir, self.failures_dir(batch_id)
-        ring_size = self.acked_ring_size
-
-        def deliver(batches):
-            """Executor task body: deliver the ordered partition AND do its
-            own bookkeeping — append delivered identities to the ledger,
-            spill failed/blocked rows (payload included) to the per-batch
-            failures dir, and yield only bounded summary rows. Task-retry
-            double-writes are resolved on read (dedup by identity)."""
-            sink = create_sink(sink_type, sink_config)
-            sink.open()
-            status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
-                           "status", "error", "deliver_count"]
-            # per-task latency histogram: {success: [bucket counts..., +Inf]}
-            lat_counts = {"true": [0] * (len(LAT_BUCKETS_US) + 1),
-                          "false": [0] * (len(LAT_BUCKETS_US) + 1)}
-            lat_sum_us = {"true": 0, "false": 0}
-
-            def _observe(success: bool, dur_us: int) -> None:
-                key = "true" if success else "false"
-                for i, le in enumerate(LAT_BUCKETS_US):
-                    if dur_us <= le:
-                        lat_counts[key][i] += 1
-                        break
-                else:
-                    lat_counts[key][-1] += 1
-                lat_sum_us[key] += dur_us
-
-            def _finish(status_pdf: pd.DataFrame, payload_pdf: pd.DataFrame):
-                """Persist one frame's outcomes executor-side; return the
-                bounded summary frame to yield (None for empty frames).
-                A task may see several Arrow frames — file names are
-                per-frame unique."""
-                if not len(status_pdf):
-                    return None
-                task_tag = uuid.uuid4().hex
-                t_now = time.time()
-                delivered = status_pdf[status_pdf["status"] == "delivered"]
-                failed = status_pdf[
-                    status_pdf["status"].isin(["failed", "blocked", "deferred"])
-                ]
-                if len(delivered):
-                    _write_parquet(
-                        os.path.join(ledger_dir,
-                                     f"batch-{batch_id}-{task_tag}.parquet"),
-                        delivered[IDENTITY],
-                    )
-                if len(failed):
-                    fail_rows = failed.merge(
-                        payload_pdf[delivery_cols + ["deliver_count"]].drop(
-                            columns=["group_id"]
-                        ),
-                        on=["commit_lsn", "commit_idx", "idempotency_key", "deliver_count"],
-                        how="left",
-                    )
-                    _write_parquet(
-                        os.path.join(fail_dir, f"task-{task_tag}.parquet"),
-                        fail_rows[delivery_cols + ["deliver_count", "status", "error"]],
-                    )
-                parts = []
-                counts = status_pdf.groupby("status").size()
-                parts.append(pd.DataFrame({
-                    "kind": "agg", "status": counts.index, "n": counts.values,
-                    "commit_lsn": 0, "commit_idx": 0, "idempotency_key": "",
-                    "group_id": "", "deliver_count": 0, "acked_at": t_now,
-                }))
-                if len(delivered):
-                    tail = delivered.tail(ring_size)
-                    parts.append(pd.DataFrame({
-                        "kind": "ring", "status": "delivered", "n": 1,
-                        "commit_lsn": tail["commit_lsn"].values,
-                        "commit_idx": tail["commit_idx"].values,
-                        "idempotency_key": tail["idempotency_key"].values,
-                        "group_id": tail["group_id"].values,
-                        "deliver_count": tail["deliver_count"].astype("int64").values,
-                        "acked_at": t_now,
-                    }))
-                return pd.concat(parts, ignore_index=True)
-
-            # cross-frame dedup carry: the tail identity of the previous
-            # Arrow frame (duplicates are sort-adjacent, so any dup that
-            # straddles a frame boundary equals the previous tail)
-            prev_tail = None
-            # cross-frame GROUP-BLOCKING carry (r11): a group whose
-            # chunk failed earlier in this task must stay blocked for
-            # the rest of the task — frames are an Arrow transport
-            # boundary, not an ordering boundary.  Per-frame reset
-            # delivered a blocked group's later rows whenever the
-            # group straddled a frame (order violation; caught by the
-            # chaos sweep under a 10-row maxRecordsPerBatch).
-            failed_groups: set = set()
-            for pdf in batches:
-                if len(pdf):
-                    dup = pdf.duplicated(subset=IDENTITY, keep="first")
-                    if prev_tail is not None:
-                        dup |= (
-                            (pdf["commit_lsn"] == prev_tail[0])
-                            & (pdf["commit_idx"] == prev_tail[1])
-                            & (pdf["idempotency_key"] == prev_tail[2])
-                        )
-                    last = pdf.iloc[-1]
-                    prev_tail = (last["commit_lsn"], last["commit_idx"],
-                                 last["idempotency_key"])
-                    if dup.any():
-                        pdf = pdf[~dup]
-                # rows behind a backoff-blocked group head: never
-                # attempted — spill them (payload included) straight to
-                # the failures dir and strip them from the frame
-                defer_mask = (
-                    pdf["_deferred"].astype(bool)
-                    if "_deferred" in pdf.columns
-                    else pd.Series(False, index=pdf.index)
-                )
-                if defer_mask.any():
-                    dpdf = pdf[defer_mask]
-                    out = _finish(
-                        pd.DataFrame({
-                            "commit_lsn": dpdf["commit_lsn"],
-                            "commit_idx": dpdf["commit_idx"],
-                            "idempotency_key": dpdf["idempotency_key"],
-                            "group_id": dpdf["group_id"],
-                            "status": "deferred",
-                            "error": "group blocked (backoff head)",
-                            "deliver_count": dpdf["deliver_count"].astype("int64"),
-                        }),
-                        dpdf,
-                    )
-                    if out is not None:
-                        yield out
-                    pdf = pdf[~defer_mask]
-                if "_deferred" in pdf.columns:
-                    pdf = pdf.drop(columns=["_deferred"])
-                if not len(pdf):
-                    continue
-                statuses = []
-                # Rows arrive sorted (group_id, lsn, idx). Each BATCH-key
-                # value keeps one open chunk that spans groups — the
-                # reference's per-batch_key Broadway batchers
-                # (sink_pipeline.ex:371-430): one sink call per
-                # (batch_key, ≤batch_size) buffer, and a failure nacks
-                # the whole chunk + blocks the affected groups' later
-                # rows.  Per-message routing keys (kafka message_key,
-                # kinesis partition_key, ...) ride in the rows and are
-                # not part of the key — keying on them meant one-row
-                # sink calls at high group cardinality (r11 soak, ~700
-                # rows/s ceiling).
-                rows = pdf.to_dict("records")
-
-                def _gkey(r):
-                    g = r["group_id"]
-                    return None if (g is None or (isinstance(g, float) and pd.isna(g))) else g
-
-                def flush(chunk):
-                    if not chunk:
-                        return
-                    # batch-level routing only: a chunk holds one
-                    # batch-key value, so chunk[0] is safe for these.
-                    # Per-MESSAGE keys (kafka message_key, nats subject,
-                    # rabbitmq routing_key) mix within a chunk and must
-                    # NOT be smeared from chunk[0] — sinks read them
-                    # row-first and fall back to their config default,
-                    # never to another row's value.
-                    routing = {c: chunk[0].get(c) for c in batch_cols}
-                    t0 = time.perf_counter()
-                    try:
-                        sink.deliver(SinkBatch(routing=routing, rows=chunk))
-                        _observe(True, int((time.perf_counter() - t0) * 1e6))
-                        for r in chunk:
-                            statuses.append(
-                                (r["commit_lsn"], r["commit_idx"], r["idempotency_key"],
-                                 _gkey(r), "delivered", "", int(r["deliver_count"]))
-                            )
-                    except Exception as e:  # noqa: BLE001
-                        _observe(False, int((time.perf_counter() - t0) * 1e6))
-                        err = str(e)[:500]
-                        for r in chunk:
-                            statuses.append(
-                                (r["commit_lsn"], r["commit_idx"], r["idempotency_key"],
-                                 _gkey(r), "failed", err, int(r["deliver_count"]))
-                            )
-                            gk = _gkey(r)
-                            if gk is not None:
-                                failed_groups.add(gk)
-
-                # batch-key value → [rows, encoded bytes]
-                buffers: dict = {}
-                last_group = last_key = None
-                for r in rows:
-                    key = tuple(_hashable(r.get(c)) for c in batch_cols)
-                    gk = _gkey(r)
-                    # a group's unsent rows sit in one buffer: before its
-                    # next row joins another key's, send the old one, so
-                    # the group reaches the sink in commit order
-                    if (gk is not None and gk == last_group and key != last_key
-                            and last_key in buffers):
-                        flush(buffers.pop(last_key)[0])
-                    # encoded bytes, not characters — a mostly-CJK payload
-                    # is up to 4x its len() and would blow a sink's wire
-                    # cap (e.g. pub/sub 10MB) if counted in characters
-                    r_bytes = len((r.get("value") or "").encode("utf-8"))
-                    buf = buffers.get(key)
-                    # send the key's chunk at the count OR byte bound
-                    # (sink_pipeline.ex:413-434: emit the accumulated
-                    # batch, start fresh with this row)
-                    if buf and (
-                        len(buf[0]) >= max_batch
-                        or (max_bytes is not None and buf[1] + r_bytes > max_bytes)
-                    ):
-                        flush(buffers.pop(key)[0])
-                        buf = None
-                    # check AFTER flushing — the group's head may have just
-                    # failed in the chunk ahead of this row
-                    if gk is not None and gk in failed_groups:
-                        statuses.append(
-                            (r["commit_lsn"], r["commit_idx"], r["idempotency_key"],
-                             gk, "blocked", "group blocked", int(r["deliver_count"]))
-                        )
-                        continue
-                    if buf is None:
-                        buf = buffers[key] = [[], 0]
-                    buf[0].append(r)
-                    buf[1] += r_bytes
-                    last_group, last_key = gk, key
-                for chunk, _ in buffers.values():
-                    flush(chunk)
-                out = _finish(pd.DataFrame(statuses, columns=status_cols), pdf)
-                if out is not None:
-                    yield out
-            # the task's closing summary: its task row + latency histogram
-            end_rows = [("task", "", 1, 0)]
-            for success in ("true", "false"):
-                counts = lat_counts[success]
-                if not any(counts):
-                    continue
-                for le, c in zip((*LAT_BUCKETS_US, LAT_INF), counts):
-                    if c:
-                        end_rows.append(("lat", success, c, le))
-                end_rows.append(("lat_agg", success, sum(counts), lat_sum_us[success]))
-            yield pd.DataFrame({
-                "kind": [r[0] for r in end_rows],
-                "status": [r[1] for r in end_rows],
-                "n": [r[2] for r in end_rows],
-                "commit_lsn": [r[3] for r in end_rows],
-                "commit_idx": 0, "idempotency_key": "", "group_id": "",
-                "deliver_count": 0, "acked_at": 0.0,
-            })
-            sink.close()
-
-        summary_pdf = arranged.mapInPandas(deliver, SUMMARY_SCHEMA).toPandas()
+    def finish(self, summary_pdf: pd.DataFrame, prep: dict,
+               batch_id: int) -> dict:
+        """Driver side of a micro-batch, after the delivery job: fold the
+        task summaries, then write the ledger compaction, the acked
+        ring, the new pending set and the discards, and reap the
+        re-ingested overflow dirs.  Returns the batch stats."""
+        now = prep["now"]
+        delivery_cols = self.delivery_cols
+        fail_dir = self.failures_dir(batch_id)
         agg = summary_pdf[summary_pdf["kind"] == "agg"]
         by_status = agg.groupby("status")["n"].sum() if len(agg) else pd.Series(dtype="int64")
 
@@ -883,9 +640,10 @@ class DeliveryEngine:
             )[IDENTITY + ["group_id", "deliver_count", "acked_at"]]
             self._update_ring(ring_new)
 
-        # new pending: executor-spilled failed/blocked rows (payloads
-        # already attached). Failed rows get bumped deliver_count +
-        # backoff; blocked rows keep their count (never attempted).
+        # new pending: executor-spilled failed/blocked/deferred rows
+        # (payloads already attached). Failed rows get bumped
+        # deliver_count + backoff; blocked and deferred rows keep their
+        # count (never attempted).
         new_pending = pd.DataFrame()
         discarded = pd.DataFrame()
         failures = None
@@ -908,9 +666,10 @@ class DeliveryEngine:
                 os.remove(os.path.join(fail_dir, f))
             os.rmdir(fail_dir)
 
-        # carry forward backing-off heads + group-deferred rows
-        if len(carry_pending):
-            new_pending = pd.concat([new_pending, carry_pending], ignore_index=True)
+        # carry forward backing-off heads + due rows of blocked groups
+        if len(prep["carry_pending"]):
+            new_pending = pd.concat([new_pending, prep["carry_pending"]],
+                                    ignore_index=True)
 
         oldest_pending_age_ms = 0.0
         if len(new_pending):
@@ -920,8 +679,8 @@ class DeliveryEngine:
             # `now` for rows failing for the first time
             if "first_seen_at" in new_pending.columns:
                 new_pending = new_pending.drop(columns=["first_seen_at"])
-            if prev_seen is not None:
-                new_pending = new_pending.merge(prev_seen, on=IDENTITY, how="left")
+            if prep["prev_seen"] is not None:
+                new_pending = new_pending.merge(prep["prev_seen"], on=IDENTITY, how="left")
                 new_pending["first_seen_at"] = new_pending.pop("_prev_seen").fillna(now)
             else:
                 new_pending["first_seen_at"] = now
@@ -965,9 +724,9 @@ class DeliveryEngine:
 
         # overflow dirs whose rows just rode through the delivery pass:
         # safe to drop only now (post-delivery, post-state-writes) — a
-        # crash any earlier replays them and the ledger dedup resolves
-        # the copies
-        for p in overflow_taken:
+        # crash any earlier replays them and the task's ledger check
+        # drops the copies
+        for p in prep["overflow_taken"]:
             shutil.rmtree(p, ignore_errors=True)
 
         return {
@@ -978,11 +737,229 @@ class DeliveryEngine:
             "deferred": n_deferred,
             "discarded": int(len(discarded)),
             "pending": int(len(new_pending)),
-            "shed": shed,
-            "spilled": spilled,
-            "reingested": reingested,
-            "overflow_backlog": overflow_backlog,
+            "shed": prep["shed"],
+            "spilled": prep["spilled"],
+            "reingested": prep["reingested"],
+            "overflow_backlog": prep["overflow_backlog"],
             "oldest_pending_age_ms": oldest_pending_age_ms,
             "delivery_latency_us": latency,
             "delivery_tasks": n_tasks,
         }
+
+
+# --- the delivery task (executor side) ------------------------------------
+def _gkey(r):
+    g = r["group_id"]
+    return None if (g is None or (isinstance(g, float) and pd.isna(g))) else g
+
+
+def deliver_partition(batches, *, batch_id: int, sink_type: str,
+                      sink_config: dict, batch_cols: tuple, batch_size: int,
+                      batch_bytes: int | None, delivery_cols: list,
+                      ledger_dir: str, fail_dir: str, ring_size: int,
+                      ledger: frozenset, blocked: frozenset):
+    """The delivery task body (mapInPandas over the arranged frame) and
+    the one place rows are skipped or held.  Per row, in (group, lsn,
+    idx) order: drop it if its identity is in ``ledger`` or repeats the
+    previous row's; defer it (status 'deferred') if its group is in
+    ``blocked``; block it if its group's chunk failed earlier in this
+    task; otherwise send it in its batch key's chunk.  The task appends
+    delivered identities to the ledger dir and failed/blocked/deferred
+    rows (payload included) to the failures dir, and yields only
+    bounded summary rows.  Task-retry double-writes are resolved on
+    read (dedup by identity)."""
+    sink = create_sink(sink_type, sink_config)
+    sink.open()
+    status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
+                   "status", "error", "deliver_count"]
+    # per-task latency histogram: {success: [bucket counts..., +Inf]}
+    lat_counts = {"true": [0] * (len(LAT_BUCKETS_US) + 1),
+                  "false": [0] * (len(LAT_BUCKETS_US) + 1)}
+    lat_sum_us = {"true": 0, "false": 0}
+
+    def _observe(success: bool, dur_us: int) -> None:
+        key = "true" if success else "false"
+        for i, le in enumerate(LAT_BUCKETS_US):
+            if dur_us <= le:
+                lat_counts[key][i] += 1
+                break
+        else:
+            lat_counts[key][-1] += 1
+        lat_sum_us[key] += dur_us
+
+    def _finish(status_pdf: pd.DataFrame, payload_pdf: pd.DataFrame):
+        """Persist one frame's outcomes; return its summary frame.  A
+        task may see several Arrow frames — file names are per-frame
+        unique."""
+        task_tag = uuid.uuid4().hex
+        t_now = time.time()
+        delivered = status_pdf[status_pdf["status"] == "delivered"]
+        failed = status_pdf[status_pdf["status"] != "delivered"]
+        if len(delivered):
+            _write_parquet(
+                os.path.join(ledger_dir, f"batch-{batch_id}-{task_tag}.parquet"),
+                delivered[IDENTITY],
+            )
+        if len(failed):
+            fail_rows = failed.merge(
+                payload_pdf[delivery_cols + ["deliver_count"]].drop(
+                    columns=["group_id"]
+                ),
+                on=["commit_lsn", "commit_idx", "idempotency_key", "deliver_count"],
+                how="left",
+            )
+            _write_parquet(
+                os.path.join(fail_dir, f"task-{task_tag}.parquet"),
+                fail_rows[delivery_cols + ["deliver_count", "status", "error"]],
+            )
+        counts = status_pdf.groupby("status").size()
+        parts = [pd.DataFrame({
+            "kind": "agg", "status": counts.index, "n": counts.values,
+            "commit_lsn": 0, "commit_idx": 0, "idempotency_key": "",
+            "group_id": "", "deliver_count": 0, "acked_at": t_now,
+        })]
+        if len(delivered):
+            tail = delivered.tail(ring_size)
+            parts.append(pd.DataFrame({
+                "kind": "ring", "status": "delivered", "n": 1,
+                "commit_lsn": tail["commit_lsn"].values,
+                "commit_idx": tail["commit_idx"].values,
+                "idempotency_key": tail["idempotency_key"].values,
+                "group_id": tail["group_id"].values,
+                "deliver_count": tail["deliver_count"].astype("int64").values,
+                "acked_at": t_now,
+            }))
+        return pd.concat(parts, ignore_index=True)
+
+    # cross-frame dedup carry: the tail identity of the previous Arrow
+    # frame (duplicates are sort-adjacent, so any dup that straddles a
+    # frame boundary equals the previous tail)
+    prev_tail = None
+    # cross-frame GROUP-BLOCKING carry (r11): a group whose chunk failed
+    # earlier in this task must stay blocked for the rest of the task —
+    # frames are an Arrow transport boundary, not an ordering boundary
+    # (a per-frame reset was an order violation, caught by the chaos
+    # sweep under a 10-row maxRecordsPerBatch).
+    failed_groups: set = set()
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        dup = pdf.duplicated(subset=IDENTITY, keep="first")
+        if prev_tail is not None:
+            dup |= (
+                (pdf["commit_lsn"] == prev_tail[0])
+                & (pdf["commit_idx"] == prev_tail[1])
+                & (pdf["idempotency_key"] == prev_tail[2])
+            )
+        last = pdf.iloc[-1]
+        prev_tail = (last["commit_lsn"], last["commit_idx"],
+                     last["idempotency_key"])
+        if ledger:
+            dup |= pd.Series([k in ledger for k in zip(
+                *(pdf[c].tolist() for c in IDENTITY))], index=pdf.index)
+        pdf = pdf[~dup]
+        if not len(pdf):
+            continue
+        statuses = []
+
+        def mark(r, status, err=""):
+            statuses.append((r["commit_lsn"], r["commit_idx"],
+                             r["idempotency_key"], _gkey(r), status, err,
+                             int(r["deliver_count"])))
+
+        def flush(chunk):
+            if not chunk:
+                return
+            # batch-level routing only: a chunk holds one batch-key
+            # value, so chunk[0] is safe for these.  Per-MESSAGE keys
+            # (kafka message_key, nats subject, rabbitmq routing_key)
+            # mix within a chunk and must NOT be smeared from chunk[0] —
+            # sinks read them row-first and fall back to their config
+            # default, never to another row's value.
+            routing = {c: chunk[0].get(c) for c in batch_cols}
+            t0 = time.perf_counter()
+            try:
+                sink.deliver(SinkBatch(routing=routing, rows=chunk))
+                _observe(True, int((time.perf_counter() - t0) * 1e6))
+                for r in chunk:
+                    mark(r, "delivered")
+            except Exception as e:  # noqa: BLE001
+                _observe(False, int((time.perf_counter() - t0) * 1e6))
+                err = str(e)[:500]
+                for r in chunk:
+                    mark(r, "failed", err)
+                    if _gkey(r) is not None:
+                        failed_groups.add(_gkey(r))
+
+        # Rows arrive sorted (group_id, lsn, idx). Each BATCH-key value
+        # keeps one open chunk that spans groups — the reference's
+        # per-batch_key Broadway batchers (sink_pipeline.ex:371-430): one
+        # sink call per (batch_key, ≤batch_size) buffer, and a failure
+        # nacks the whole chunk + blocks the affected groups' later
+        # rows.  Per-message routing keys (kafka message_key, kinesis
+        # partition_key, ...) ride in the rows and are not part of the
+        # key — keying on them meant one-row sink calls at high group
+        # cardinality (r11 soak, ~700 rows/s ceiling).
+        # batch-key value → [rows, encoded bytes]
+        buffers: dict = {}
+        last_group = last_key = None
+        for r in pdf.to_dict("records"):
+            gk = _gkey(r)
+            # behind a backing-off pending head: never attempted, the
+            # row rides in pending until the head resolves
+            if gk in blocked:
+                mark(r, "deferred", "group blocked (backoff head)")
+                continue
+            key = tuple(_hashable(r.get(c)) for c in batch_cols)
+            # a group's unsent rows sit in one buffer: before its next
+            # row joins another key's, send the old one, so the group
+            # reaches the sink in commit order
+            if (gk is not None and gk == last_group and key != last_key
+                    and last_key in buffers):
+                flush(buffers.pop(last_key)[0])
+            # encoded bytes, not characters — a mostly-CJK payload is up
+            # to 4x its len() and would blow a sink's wire cap (e.g.
+            # pub/sub 10MB) if counted in characters
+            r_bytes = len((r.get("value") or "").encode("utf-8"))
+            buf = buffers.get(key)
+            # send the key's chunk at the count OR byte bound
+            # (sink_pipeline.ex:413-434: emit the accumulated batch,
+            # start fresh with this row)
+            if buf and (
+                len(buf[0]) >= batch_size
+                or (batch_bytes is not None and buf[1] + r_bytes > batch_bytes)
+            ):
+                flush(buffers.pop(key)[0])
+                buf = None
+            # check AFTER flushing — the group's head may have just
+            # failed in the chunk ahead of this row
+            if gk is not None and gk in failed_groups:
+                mark(r, "blocked", "group blocked")
+                continue
+            if buf is None:
+                buf = buffers[key] = [[], 0]
+            buf[0].append(r)
+            buf[1] += r_bytes
+            last_group, last_key = gk, key
+        for chunk, _ in buffers.values():
+            flush(chunk)
+        yield _finish(pd.DataFrame(statuses, columns=status_cols), pdf)
+    # the task's closing summary: its task row + latency histogram
+    end_rows = [("task", "", 1, 0)]
+    for success in ("true", "false"):
+        counts = lat_counts[success]
+        if not any(counts):
+            continue
+        for le, c in zip((*LAT_BUCKETS_US, LAT_INF), counts):
+            if c:
+                end_rows.append(("lat", success, c, le))
+        end_rows.append(("lat_agg", success, sum(counts), lat_sum_us[success]))
+    yield pd.DataFrame({
+        "kind": [r[0] for r in end_rows],
+        "status": [r[1] for r in end_rows],
+        "n": [r[2] for r in end_rows],
+        "commit_lsn": [r[3] for r in end_rows],
+        "commit_idx": 0, "idempotency_key": "", "group_id": "",
+        "deliver_count": 0, "acked_at": 0.0,
+    })
+    sink.close()

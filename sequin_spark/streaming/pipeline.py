@@ -239,7 +239,8 @@ class ConsumerPipeline:
         trim_delivered_cursors): with checkpoint-commit=ack the replay
         window is the last uncommitted micro-batch, so identities
         delivered ≥4 batches ago can never recur and keeping them only
-        grows the per-batch anti-join broadcast with stream lifetime."""
+        grows, with stream lifetime, the identity set each delivery task
+        checks."""
         if self.scd2 is not None:
             from sequin_spark.streaming.stateful import scd2_history_stream
 

@@ -421,11 +421,10 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
     baseline — a silent extra shuffle in arrange_for_delivery would
     only surface as trigger-latency drift.  Fingerprint the plan
     against a committed baseline: exactly
-    ONE group-hash Exchange and ONE in-partition Sort, no joins."""
-    import re as _re
-
+    ONE group-hash Exchange and ONE in-partition Sort, no joins — also
+    for the frame prepare() builds when a ledger, blocked groups and
+    due pending retries all exist."""
     from sequin_spark.streaming.delivery import DeliveryEngine
-    from tools.plan_stats import plan_stats
 
     base_path = os.path.join(os.path.dirname(__file__), "data",
                              "delivery_plan_baseline.json")
@@ -440,7 +439,38 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
     eng = DeliveryEngine(
         sink_type="benchmark", sink_config={},
         state_dir=str(tmp_path / "sync"), routing_cols=("topic",))
-    arranged = eng.arrange_for_delivery(rows)
+    _assert_delivery_plan(eng.arrange_for_delivery(rows), baseline["sync"])
+
+    # the frame prepare() hands to the delivery task when a ledger,
+    # a backing-off pending head (blocked group g3) and a due retry
+    # (group g2) all exist: the ledger and blocked-group checks run in
+    # the task, so the plan keeps the same shape — no join
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    os.makedirs(eng.ledger_dir)
+    papq.write_table(pa.table({
+        "commit_lsn": [10], "commit_idx": [0], "idempotency_key": ["k1"]}),
+        os.path.join(eng.ledger_dir, "batch-0-seed.parquet"))
+    os.makedirs(os.path.dirname(eng.pending_path))
+    papq.write_table(pa.Table.from_pandas(pd.DataFrame({
+        "group_id": ["g2", "g3"], "commit_lsn": [5, 6], "commit_idx": [0, 0],
+        "idempotency_key": ["k5", "k6"], "key": ["key", "key"],
+        "value": ["val", "val"], "topic": ["t", "t"],
+        "deliver_count": [1, 1], "not_visible_until": [0.0, 4e9],
+    }), preserve_index=False), eng.pending_path)
+    prep = eng.prepare(rows, 1)
+    assert prep["ledger"] == {(10, 0, "k1")}
+    assert prep["blocked"] == {"g3"}
+    _assert_delivery_plan(prep["arranged"], baseline["sync"])
+
+
+def _assert_delivery_plan(arranged, expected: dict) -> None:
+    import re as _re
+
+    from tools.plan_stats import plan_stats
+
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         arranged.explain("formatted")
@@ -453,7 +483,7 @@ def test_delivery_plan_fingerprint(spark, tmp_path):
         plan), plan
     got = plan_stats(plan)
     got["sorts"] = len(_re.findall(r"\(\d+\) Sort\b", plan))
-    assert got == baseline["sync"], (
-        f"delivery plan fingerprint drifted: {got} != committed {baseline['sync']} — a new shuffle or "
+    assert got == expected, (
+        f"delivery plan fingerprint drifted: {got} != committed {expected} — a new shuffle or "
         f"sort on the trigger path needs a justified baseline "
         f"update in the same commit")

@@ -150,6 +150,75 @@ def test_deferred_rows_spill_executor_side_and_deliver_in_order(spark, tmp_path)
     assert ring["k2"]["deliver_count"] == 0
 
 
+def test_due_retry_already_in_ledger_is_not_redelivered(spark, tmp_path):
+    """A due pending retry takes the same ledger check as every other
+    row.  A process killed after the delivery job but before pending is
+    rewritten restarts with the old pending file; its retry, already in
+    the ledger, must not reach the sink a second time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    attempt_dir = tmp_path / "attempts"
+    attempt_dir.mkdir()
+    engine = DeliveryEngine(
+        "failing",
+        {"fail_substring": "g1", "attempt_dir": str(attempt_dir)},
+        state_dir=str(tmp_path / "state"),
+        max_retry_count=5,
+        backoff_base_s=120.0,
+    )
+    df = spark.createDataFrame(
+        [("g1", 1, 0, "k1", "g1", '{"n":1}')],
+        "group_id string, commit_lsn long, commit_idx long, "
+        "idempotency_key string, key string, value string",
+    )
+    assert engine.process_batch(df, 0)["failed"] == 1
+    pending = pq.read_table(engine.pending_path).to_pandas()
+    pending["not_visible_until"] = time.time() - 1
+    stale = pa.Table.from_pandas(pending, preserve_index=False)
+    pq.write_table(stale, engine.pending_path)
+    stats1 = engine.process_batch(df.limit(0), 1)
+    assert stats1["delivered"] == 1 and stats1["pending"] == 0
+
+    # killed before the pending rewrite: the old file comes back
+    pq.write_table(stale, engine.pending_path)
+    stats2 = engine.process_batch(df.limit(0), 2)
+    assert stats2["delivered"] == 0 and stats2["pending"] == 0
+    ring = engine.acked_ring()
+    assert list(ring["idempotency_key"]) == ["k1"]
+
+
+def test_batch_with_ledger_and_blocked_groups_runs_two_jobs(spark, tmp_path):
+    """The ledger and blocked-group checks run inside the delivery task,
+    so a batch runs the delivery job's two stages and nothing else: no
+    ledger scan, no broadcast join."""
+    import uuid
+
+    schema = ("group_id string, commit_lsn long, commit_idx long, "
+              "idempotency_key string, key string, value string")
+    engine = DeliveryEngine(
+        "failing", {"fail_substring": "g1"},
+        state_dir=str(tmp_path / "state"),
+        max_retry_count=5, backoff_base_s=120.0,
+    )
+    stats0 = engine.process_batch(spark.createDataFrame(
+        [("g1", 1, 0, "k1", "g1", "{}"), ("g2", 2, 0, "k2", "g2", "{}")],
+        schema), 0)
+    assert stats0["delivered"] == 1 and stats0["pending"] == 1
+    batch = spark.createDataFrame(
+        [("g1", 3, 0, "k3", "g1", "{}"), ("g2", 2, 0, "k2", "g2", "{}"),
+         ("g3", 4, 0, "k4", "g3", "{}")], schema)
+    sc = spark.sparkContext
+    group = "delivery-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "process_batch")
+    try:
+        stats = engine.process_batch(batch, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (stats["delivered"], stats["deferred"], stats["pending"]) == (1, 1, 2)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_discard_after_max_retries(spark, tmp_path):
     df = spark.createDataFrame(
         [("g1", 1, 0, "k", "g1", "{}")],

@@ -104,6 +104,10 @@ def audit_path(round_n: int) -> str:
 
 
 def write_audit() -> int:
+    # one Spark worker thread per usable core: get_spark's default of
+    # 32 oversubscribes a small host many times over
+    os.environ.setdefault("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     sys.path.insert(0, HERE)
     from tools.oracle_check import run_checks
 
