@@ -810,6 +810,7 @@ def cmd_serve(args, out) -> int:
 
     from sequin_spark.plans.config_api import ConfigApiServer, ConfigRegistry
     from sequin_spark.plans.spec import load_config
+    from sequin_spark.schema import EVENT_SCHEMA
     from sequin_spark.session import get_spark
     from sequin_spark.streaming.supervisor import ConsumerSupervisor
     from sequin_spark.streaming.trace import Tracer
@@ -830,12 +831,12 @@ def cmd_serve(args, out) -> int:
         print(f"Applied {len(result.get('resources', []))} resources",
               file=out)
 
-    schema_df = spark.read.parquet(args.events)
-    schema = schema_df.schema
     tracer = Tracer()
+    # the CDC log has a fixed schema: no inference job at boot, and a
+    # fresh deploy boots on an empty log before the first WAL flush
     sup = ConsumerSupervisor(
         spark, registry,
-        stream_factory=lambda: spark.readStream.schema(schema)
+        stream_factory=lambda: spark.readStream.schema(EVENT_SCHEMA)
         .parquet(args.events),
         state_root=args.state_dir,
         checkpoint_root=os.path.join(args.state_dir, "_checkpoints"),

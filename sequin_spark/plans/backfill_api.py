@@ -34,6 +34,7 @@ from sequin_spark.sources.backfill import (
     keyset_range,
     walk_pages,
 )
+from sequin_spark.sources.fast_count import count_or_estimate
 
 # backfill.ex:92-98 @state_transitions
 STATE_TRANSITIONS = {
@@ -73,7 +74,10 @@ class BackfillJob:
         self._throttle_ms = throttle_ms
         self._bf = Backfill(table_ref, self._cursor_cols)
         try:
-            self._bf.rows_initial_count = df.count()
+            # parquet footer counts, as run_backfill does: no scan
+            # before the first page (table_reader.ex:333-360)
+            self._bf.rows_initial_count = count_or_estimate(
+                df, df.inputFiles() or None)
         except Exception:  # noqa: BLE001 — estimate is best-effort
             self._bf.rows_initial_count = 0
         self._opt = PageSizeOptimizer(initial=initial_page_size)

@@ -6,7 +6,7 @@ from sequin_spark.sources.backfill import (
     keyset_predicate,
     run_backfill,
 )
-from sequin_spark.sources.cdc_log import read_cdc_log, stream_cdc_log
+from sequin_spark.sources.cdc_log import read_cdc_log
 from sequin_spark.sources.rate_cdc import benchmark_stream
 
 __all__ = [
@@ -17,6 +17,5 @@ __all__ = [
     "backfill_snapshot",
     "fence_merge",
     "read_cdc_log",
-    "stream_cdc_log",
     "benchmark_stream",
 ]

@@ -1,14 +1,12 @@
-"""CDC event-log sources (batch + streaming).
+"""CDC event-log source.
 
 The reference ingests the Postgres replication protocol directly
-(slot_producer.ex). Spark has no native replication-slot source, so the
-engine consumes the canonical event schema from:
-
-- a file-based CDC log (parquet/JSON, e.g. written by Debezium/wal2json)
-  — ``spark.readStream.format("parquet")`` with schema enforcement;
-- Kafka (Debezium topics) — ``readStream.format("kafka")`` + from_json;
-- a JDBC poller over an event-log table (batch incremental reads driven
-  by the (commit_lsn, commit_idx) cursor).
+(slot_producer.ex). Spark has no native replication-slot source, so
+``sources.replication`` folds pgoutput frames into canonical events and
+appends them as parquet files to a CDC-log directory; the engine opens
+that directory with EVENT_SCHEMA, as a batch frame here or as a
+Structured Streaming file source (``spark.readStream.schema(
+EVENT_SCHEMA).parquet(path)`` in ``sequin serve``).
 
 Batch-replay and streaming share the exact same downstream operator
 code: a streaming DataFrame and a batch DataFrame with EVENT_SCHEMA are
@@ -19,50 +17,9 @@ semantics.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sequin_spark.schema import EVENT_SCHEMA
 
 
 def read_cdc_log(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(EVENT_SCHEMA).parquet(path)
-
-
-def stream_cdc_log(spark: SparkSession, path: str, max_files_per_trigger: int = 16) -> DataFrame:
-    """File-stream source; maxFilesPerTrigger bounds micro-batch size the
-    way the reference's GenStage demand bounds in-flight messages."""
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def from_kafka_debezium(spark: SparkSession, bootstrap: str, topics: str) -> DataFrame:
-    """Kafka CDC ingestion: value JSON → canonical events.
-
-    Debezium envelope mapping: op c/u/d/r → insert/update/delete/read,
-    before → changes pre-image, source.lsn → commit_lsn.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topics)
-        .option("startingOffsets", "earliest")
-        .load()
-    )
-    payload = F.col("value").cast("string")
-    op_map = F.create_map(
-        F.lit("c"), F.lit("insert"), F.lit("u"), F.lit("update"),
-        F.lit("d"), F.lit("delete"), F.lit("r"), F.lit("read"),
-    )
-    return raw.select(
-        op_map.getItem(F.get_json_object(payload, "$.op")).alias("action"),
-        F.from_json(F.get_json_object(payload, "$.after"), "map<string,string>").alias("record"),
-        F.from_json(F.get_json_object(payload, "$.before"), "map<string,string>").alias("changes"),
-        F.get_json_object(payload, "$.source.schema").alias("table_schema"),
-        F.get_json_object(payload, "$.source.table").alias("table_name"),
-        F.get_json_object(payload, "$.source.lsn").cast("long").alias("commit_lsn"),
-        F.lit(0).cast("long").alias("commit_idx"),
-        (F.get_json_object(payload, "$.source.ts_ms").cast("long") / 1000).cast("timestamp").alias("commit_timestamp"),
-    )

@@ -15,19 +15,26 @@ an optional fraction argument.
 from __future__ import annotations
 
 
-def fast_count_estimate(path: str, fraction: float = 1.0) -> int:
-    """Sum parquet footer num_rows across the dataset at ``path`` —
+def fast_count_estimate(path: "str | list[str]", fraction: float = 1.0) -> int:
+    """Sum parquet footer num_rows across the dataset at ``path`` (a
+    dataset path, or the file URIs ``DataFrame.inputFiles()`` lists) —
     metadata only, independent of table width. ``fraction`` scales the
     estimate for a cursor-bounded backfill window (include_min
     adjustment, table_reader.ex:345-358)."""
     import pyarrow.dataset as ds
+    from pyarrow import fs
 
-    dataset = ds.dataset(path, format="parquet")
+    if isinstance(path, str):
+        dataset = ds.dataset(path, format="parquet")
+    else:
+        dataset = ds.dataset([fs.FileSystem.from_uri(u)[1] for u in path],
+                             format="parquet",
+                             filesystem=fs.FileSystem.from_uri(path[0])[0])
     total = dataset.count_rows()
     return int(total * fraction)
 
 
-def count_or_estimate(df, path: str | None = None) -> int:
+def count_or_estimate(df, path: "str | list[str] | None" = None) -> int:
     """Prefer the metadata estimate when the parquet path is known;
     fall back to a distributed count(*) otherwise."""
     if path is not None:

@@ -27,10 +27,10 @@ Begin/Commit cursor bookkeeping lives in ``pgoutput.EventFolder``.
 Spark integration: Spark has no replication-slot source, so the edge is
 a tiny long-lived client (one per slot — the protocol is inherently
 serial per slot) that folds frames into canonical events and appends
-them as parquet files to a CDC-log directory.  ``stream_cdc_log``
-(cdc_log.py) tails that directory as a Structured Streaming file
-source; everything downstream — filters, transforms, routing, delivery
-— is ordinary distributed engine code.  The LSN is acked only after the
+them as parquet files to a CDC-log directory.  The engine tails that
+directory as a Structured Streaming file source opened with
+EVENT_SCHEMA (``sequin serve``); everything downstream — filters,
+transforms, routing, delivery — is ordinary distributed engine code.  The LSN is acked only after the
 parquet file is durably written, the same checkpoint-is-ack rule the
 streaming pipeline uses.
 """
@@ -463,8 +463,8 @@ class ReplicationClient:
 class ReplicationIngestWorker:
     """Drives a ReplicationClient: folds XLogData frames through the
     pgoutput decoder into canonical events, appends them to a CDC-log
-    directory as parquet (the Structured Streaming file source tailed by
-    ``stream_cdc_log``), and acks the flushed LSN.
+    directory as parquet (the Structured Streaming file source the
+    engine tails), and acks the flushed LSN.
 
     Ack discipline (checkpoint-is-ack, slot_producer.ex:304-310
     update_restart_wal_cursor + :733-758 send_ack):

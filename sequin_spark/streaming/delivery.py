@@ -18,12 +18,22 @@ Execution model, three steps per micro-batch (process_batch):
   overflow, arranged by group hash and (group, lsn, idx)
   (arrange_for_delivery); the trimmed ledger identities, read with
   pyarrow, and the groups blocked behind a backing-off pending head.
+  Due retries re-enter as one scan of pending.parquet with an explicit
+  schema and a pushed-down ``not_visible_until <= now`` filter; only
+  the rows still backing off stay on the driver.
 - deliver (one mapInPandas job over deliver_partition): the one place
   rows are skipped or held.  Each task writes its own ledger and
   failures files and yields only BOUNDED summary rows, so nothing
   O(batch-rows) crosses the driver.
 - finish (driver): ledger compaction and trim, acked ring, pending,
   discards and overflow reap.
+
+Every state file that holds rows (task failures, pending, discards) is
+written in one typed row schema, the Arrow form of the delivery rows'
+Spark schema, plus the file's own bookkeeping columns; the admin
+operations keep the schema of the files they read.  Types are never
+inferred from pandas, so a map-typed routing value (http_push
+``headers``) reads back as a map.
 
 Scale note (100 TB): the ledger and pending-retry state are the only
 driver-coordinated pieces — on a real cluster state_dir is shared
@@ -48,6 +58,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from sequin_spark.functions.routing import (
     ALWAYS_PRESENT_DELIVERY_COLS, batch_keys_for)
@@ -77,11 +89,6 @@ LAT_INF = 2**62  # the +Inf bucket marker
 # key (table_reader.ex:405) — so dedup/ledger/status identity is the
 # triple, which degrades to pure cursor identity for CDC rows.
 IDENTITY = ["commit_lsn", "commit_idx", "idempotency_key"]
-# createDataFrame rows above this inline into the plan as a
-# LocalRelation whose string form feeds Spark's redaction regex —
-# multi-MB plans overflow the Java regex stack (r11 soak).  Bigger
-# driver-held frames round-trip through a state-dir parquet instead.
-LOCAL_PLAN_MAX_ROWS = 1024
 
 BACKOFF_MIN_S = 1.0
 BACKOFF_MAX_S = 180.0
@@ -102,9 +109,36 @@ def _hashable(v):
     return v
 
 
-def _write_parquet(path: str, df: pd.DataFrame) -> None:
+def _write_parquet(path: str, data: "pd.DataFrame | pa.Table",
+                   schema: pa.Schema | None = None) -> None:
+    """Write a state file; a frame is converted in ``schema`` when one
+    is given (columns outside it are dropped), else by inference."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(pa.Table.from_pandas(df, preserve_index=False), path)
+    if isinstance(data, pd.DataFrame):
+        data = pa.Table.from_pandas(data, schema=schema, preserve_index=False)
+    pq.write_table(data, path)
+
+
+def _plus(schema: pa.Schema, **types) -> pa.Schema:
+    """``schema`` with the named columns appended."""
+    for name, t in types.items():
+        schema = schema.append(pa.field(name, t))
+    return schema
+
+
+def _conform(table: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``table`` in ``schema``: columns by name and cast, a missing
+    column as nulls, columns outside the schema dropped."""
+    def column(f):
+        if f.name not in table.column_names:
+            return pa.nulls(table.num_rows, f.type)
+        try:
+            return table[f.name].cast(f.type)
+        except pa.ArrowNotImplementedError:
+            # a map that pandas inference wrote as a struct (a dict
+            # per row): Arrow has no struct → map cast, so rebuild it
+            return pa.array(table[f.name].to_pylist(), f.type)
+    return pa.Table.from_arrays([column(f) for f in schema], schema=schema)
 
 
 class DeliveryEngine:
@@ -206,24 +240,6 @@ class DeliveryEngine:
         included) — read back by the driver, O(failures) not O(batch)."""
         return os.path.join(self.state_dir, "failures", f"batch-{batch_id}")
 
-    def _scalable_local_df(self, spark: SparkSession, pdf: pd.DataFrame,
-                           tag: str) -> DataFrame:
-        """Driver-held rows → Spark DataFrame WITHOUT inlining them
-        into the query plan once they're big: createDataFrame embeds
-        every row in a LocalRelation, and a multi-megabyte plan string
-        (tens of thousands of pending re-entries after a catch-up
-        burst) blows Java's regex stack inside Spark's progress/plan
-        redaction — the stream execution thread died of
-        StackOverflowError in the r11 soak.  Above the threshold the
-        rows round-trip through a state-dir parquet so the plan is a
-        one-file scan.  Safe to reuse the per-tag path: process_batch
-        fully materializes within the call."""
-        if len(pdf) <= LOCAL_PLAN_MAX_ROWS:
-            return spark.createDataFrame(pdf)
-        path = os.path.join(self.state_dir, "reentry", f"{tag}.parquet")
-        _write_parquet(path, pdf)
-        return spark.read.parquet(path)
-
     # --- pause_on_full overflow spill (disk-backed backpressure) ---------
     @property
     def overflow_dir(self) -> str:
@@ -303,10 +319,14 @@ class DeliveryEngine:
         df = spark.read.parquet(*nonempty)
         return df, rows, take
 
-    def _read_pending(self) -> pd.DataFrame | None:
+    def _pending_table(self) -> pa.Table | None:
         if os.path.exists(self.pending_path):
-            return pq.read_table(self.pending_path).to_pandas()
+            return pq.read_table(self.pending_path)
         return None
+
+    def _read_pending(self) -> pd.DataFrame | None:
+        pending = self._pending_table()
+        return None if pending is None else pending.to_pandas()
 
     def read_ledger(self, spark: SparkSession) -> DataFrame | None:
         if os.path.isdir(self.ledger_dir) and any(
@@ -392,15 +412,21 @@ class DeliveryEngine:
 
     # --- admin operations (slot_message_store.ex discard_all /
     # redeliver semantics) -------------------------------------------------
+    def _discard_admin(self, rows: pa.Table, error: str) -> None:
+        """Write pending rows to the discards, in the schema they were
+        read with less the pending-only columns, plus ``error``."""
+        rows = rows.drop_columns([c for c in ("not_visible_until", "first_seen_at")
+                                  if c in rows.column_names])
+        _write_parquet(
+            os.path.join(self.discarded_dir, f"admin-{uuid.uuid4().hex}.parquet"),
+            rows.append_column("error", pa.array([error] * rows.num_rows, pa.string())))
+
     def discard_all_pending(self) -> int:
         """Admin: drop the whole retry backlog (discard_all)."""
-        pending = self._read_pending()
-        n = 0 if pending is None else len(pending)
+        pending = self._pending_table()
+        n = 0 if pending is None else pending.num_rows
         if n:
-            _write_parquet(
-                os.path.join(self.discarded_dir, f"admin-{uuid.uuid4().hex}.parquet"),
-                pending.drop(columns=["not_visible_until"]).assign(error="admin discard_all"),
-            )
+            self._discard_admin(pending, "admin discard_all")
             os.remove(self.pending_path)
         return n
 
@@ -412,45 +438,48 @@ class DeliveryEngine:
         (slot_message_store.ex discard_failing_messages;
         slot_message_store_test.exs:1084 "discards only failing
         messages").  Returns the discarded count."""
-        pending = self._read_pending()
-        if pending is None or not len(pending):
+        pending = self._pending_table()
+        if pending is None or not pending.num_rows:
             return 0
-        failing = pending[pending["deliver_count"] > 0]
-        if not len(failing):
+        is_failing = pc.fill_null(pc.greater(pending["deliver_count"], 0), False)
+        failing = pending.filter(is_failing)
+        if not failing.num_rows:
             return 0
-        _write_parquet(
-            os.path.join(self.discarded_dir,
-                         f"admin-{uuid.uuid4().hex}.parquet"),
-            failing.drop(columns=["not_visible_until"])
-                   .assign(error="admin discard_failing"),
-        )
-        keep = pending[pending["deliver_count"] <= 0]
-        if len(keep):
+        self._discard_admin(failing, "admin discard_failing")
+        keep = pending.filter(pc.invert(is_failing))
+        if keep.num_rows:
             _write_parquet(self.pending_path, keep)
         else:
             os.remove(self.pending_path)
-        return int(len(failing))
+        return failing.num_rows
 
     def redeliver_discarded(self) -> int:
         """Admin: move discarded (max-retry-exceeded) messages back into
         the pending set with a reset deliver_count — the manual
-        redeliver escape hatch after fixing a broken sink."""
+        redeliver escape hatch after fixing a broken sink.  Column types
+        are the ones the files carry; the next batch's scan reads them
+        in the batch's row schema."""
         if not (os.path.isdir(self.discarded_dir) and os.listdir(self.discarded_dir)):
             return 0
-        frames = [
-            pq.read_table(os.path.join(self.discarded_dir, f)).to_pandas()
-            for f in os.listdir(self.discarded_dir)
-        ]
-        disc = pd.concat(frames, ignore_index=True).drop(columns=["error"], errors="ignore")
-        disc["deliver_count"] = 0
-        disc["not_visible_until"] = 0.0
-        pending = self._read_pending()
-        merged = pd.concat([pending, disc], ignore_index=True) if pending is not None else disc
-        merged = merged.drop_duplicates(subset=IDENTITY, keep="first")
-        _write_parquet(self.pending_path, merged)
-        for f in os.listdir(self.discarded_dir):
-            os.remove(os.path.join(self.discarded_dir, f))
-        return len(disc)
+        files = [os.path.join(self.discarded_dir, f)
+                 for f in os.listdir(self.discarded_dir)]
+        disc = pa.concat_tables([pq.read_table(f) for f in files],
+                                promote_options="permissive")
+        disc = disc.drop_columns([c for c in ("error", "not_visible_until")
+                                  if c in disc.column_names])
+        n = disc.num_rows
+        disc = disc.set_column(
+            disc.schema.get_field_index("deliver_count"), "deliver_count",
+            pa.repeat(pa.scalar(0, disc.schema.field("deliver_count").type), n),
+        ).append_column("not_visible_until", pa.repeat(pa.scalar(0.0), n))
+        pending = self._pending_table()
+        if pending is not None:
+            disc = pa.concat_tables([pending, disc], promote_options="permissive")
+        dup = disc.select(IDENTITY).to_pandas().duplicated(keep="first")
+        _write_parquet(self.pending_path, disc.filter(pa.array(~dup.to_numpy())))
+        for f in files:
+            os.remove(f)
+        return n
 
     def arrange_for_delivery(self, new_rows: DataFrame) -> DataFrame:
         """Physical layout for ordered delivery: ONE group-hash
@@ -482,7 +511,9 @@ class DeliveryEngine:
             deliver_partition, batch_id=batch_id,
             sink_type=self.sink_type, sink_config=dict(self.sink_config),
             batch_cols=self.batch_cols, batch_size=self.batch_size,
-            batch_bytes=self.batch_bytes, delivery_cols=self.delivery_cols,
+            batch_bytes=self.batch_bytes,
+            fail_schema=_plus(prep["row_schema"], status=pa.string(),
+                              error=pa.string()),
             ledger_dir=self.ledger_dir, fail_dir=self.failures_dir(batch_id),
             ring_size=self.acked_ring_size,
             ledger=prep["ledger"], blocked=prep["blocked"])
@@ -509,20 +540,29 @@ class DeliveryEngine:
         new_rows = batch_df.select(
             *[F.col(c) for c in delivery_cols]
         ).withColumn("deliver_count", F.lit(0))
+        # one typed row schema for every state file the batch writes
+        # (task failures, pending, discards): the Arrow form of the rows'
+        # Spark schema, so a map-typed routing column (http_push
+        # headers) is a map on disk and on the way back in
+        row_schema = pa.schema([f.with_nullable(True)
+                                for f in to_arrow_schema(new_rows.schema)])
+        pending_schema = _plus(row_schema, not_visible_until=pa.float64(),
+                               first_seen_at=pa.float64())
 
-        # pending retries: due ones re-enter delivery; not-due (still
-        # backing off) block their whole group. Messages deferred by
-        # group blocking are NOT dropped — they ride in pending with
-        # unchanged deliver_count until the group head resolves.
-        pending = self._read_pending()
+        pending = self._pending_table()
+        if pending is not None and not pending.schema.equals(pending_schema):
+            # written with inferred types (an int64 deliver_count, an
+            # all-None column typed null) or another routing set:
+            # rewrite it once in the row schema, so the scan reads it
+            pending = _conform(pending, pending_schema)
+            _write_parquet(self.pending_path, pending)
         # first-seen times survive redelivery round-trips via this driver-side
         # snapshot (pending is bounded by max_pending) — feeds the
         # sequin_oldest_message_age_ms gauge (prometheus.ex:39-45)
         prev_seen = None
-        if pending is not None and "first_seen_at" in pending.columns:
-            prev_seen = pending[IDENTITY + ["first_seen_at"]].rename(
-                columns={"first_seen_at": "_prev_seen"}
-            ).drop_duplicates(subset=IDENTITY)
+        if pending is not None:
+            prev_seen = (pending.select(IDENTITY + ["first_seen_at"])
+                         .to_pandas().drop_duplicates(subset=IDENTITY))
         shed = spilled = reingested = 0
         overflow_taken: list[str] = []
         overflow_backlog = 0
@@ -539,7 +579,7 @@ class DeliveryEngine:
             # group (order violation).  Raising here instead (the pre-
             # r11 behavior) killed the stream on the first post-restart
             # catch-up burst — found by the r11 chaos-under-load soak.
-            pend_n = 0 if pending is None else len(pending)
+            pend_n = 0 if pending is None else pending.num_rows
             ov = self._overflow_dirs()
             if ov or pend_n >= self.max_pending:
                 if int(new_rows.count()):
@@ -556,32 +596,36 @@ class DeliveryEngine:
                 # re-ingest
                 overflow_backlog = (
                     sum(n for _, n in self._overflow_dirs()) - reingested)
-        elif pending is not None and len(pending) >= self.max_pending:
+        elif pending is not None and pending.num_rows >= self.max_pending:
             # discard_on_full: count-and-drop, recorded as shed
             shed = int(new_rows.count())
             new_rows = new_rows.limit(0)
 
-        blocked_groups: set[str] = set()
-        carry_pending = pd.DataFrame()
-        if pending is not None and len(pending):
-            due = pending[pending["not_visible_until"] <= now]
-            not_due = pending[pending["not_visible_until"] > now]
-            blocked_groups = set(not_due["group_id"].dropna())
-            due_blocked = due[due["group_id"].isin(blocked_groups)]
-            due_free = due[~due["group_id"].isin(blocked_groups)]
-            carry_pending = pd.concat([not_due, due_blocked], ignore_index=True)
-            if len(due_free):
-                new_rows = new_rows.unionByName(
-                    self._scalable_local_df(
-                        spark, due_free[delivery_cols + ["deliver_count"]],
-                        "due_free"))
+        # pending retries: rows still backing off stay on the driver and
+        # block their group; due rows re-enter delivery through one typed
+        # scan of pending.parquet, due rows of a blocked group included —
+        # the task defers those (status 'deferred') with their
+        # deliver_count unchanged until the group head resolves
+        blocked: frozenset = frozenset()
+        waiting = pending
+        if pending is not None and pending.num_rows:
+            waiting = pending.filter(
+                pc.greater(pending["not_visible_until"], now))
+            blocked = frozenset(waiting["group_id"].drop_null().to_pylist())
+            if waiting.num_rows < pending.num_rows:
+                read_schema = StructType([
+                    *new_rows.schema.fields,
+                    StructField("not_visible_until", DoubleType())])
+                due = spark.read.schema(read_schema).parquet(
+                    self.pending_path).where(F.col("not_visible_until") <= now)
+                new_rows = new_rows.unionByName(due.drop("not_visible_until"))
 
         return {
             "arranged": self.arrange_for_delivery(new_rows),
             "ledger": self._ledger_identities(),
-            "blocked": frozenset(blocked_groups),
-            "now": now, "prev_seen": prev_seen,
-            "carry_pending": carry_pending,
+            "blocked": blocked,
+            "row_schema": row_schema, "pending_schema": pending_schema,
+            "now": now, "prev_seen": prev_seen, "waiting": waiting,
             "shed": shed, "spilled": spilled, "reingested": reingested,
             "overflow_taken": overflow_taken,
             "overflow_backlog": overflow_backlog,
@@ -594,7 +638,6 @@ class DeliveryEngine:
         ring, the new pending set and the discards, and reap the
         re-ingested overflow dirs.  Returns the batch stats."""
         now = prep["now"]
-        delivery_cols = self.delivery_cols
         fail_dir = self.failures_dir(batch_id)
         agg = summary_pdf[summary_pdf["kind"] == "agg"]
         by_status = agg.groupby("status")["n"].sum() if len(agg) else pd.Series(dtype="int64")
@@ -641,10 +684,10 @@ class DeliveryEngine:
             self._update_ring(ring_new)
 
         # new pending: executor-spilled failed/blocked/deferred rows
-        # (payloads already attached). Failed rows get bumped
-        # deliver_count + backoff; blocked and deferred rows keep their
-        # count (never attempted).
-        new_pending = pd.DataFrame()
+        # (payloads already attached) and the rows still backing off.
+        # Failed rows get bumped deliver_count + backoff; blocked and
+        # deferred rows keep their count (never attempted).
+        parts = [] if prep["waiting"] is None else [prep["waiting"]]
         discarded = pd.DataFrame()
         failures = None
         if os.path.isdir(fail_dir) and os.listdir(fail_dir):
@@ -661,32 +704,30 @@ class DeliveryEngine:
             ]
             over = failures["deliver_count"] > self.max_retry_count
             discarded = failures[over]
-            new_pending = failures[~over][delivery_cols + ["deliver_count", "not_visible_until"]]
+            # first_seen_at: restored from the pre-batch snapshot for
+            # rows that were already pending, stamped `now` below for
+            # rows failing for the first time
+            retry = failures[~over]
+            retry = (retry.merge(prep["prev_seen"], on=IDENTITY, how="left")
+                     if prep["prev_seen"] is not None
+                     else retry.assign(first_seen_at=now))
+            parts.insert(0, pa.Table.from_pandas(
+                retry, schema=prep["pending_schema"], preserve_index=False))
             for f in os.listdir(fail_dir):
                 os.remove(os.path.join(fail_dir, f))
             os.rmdir(fail_dir)
 
-        # carry forward backing-off heads + due rows of blocked groups
-        if len(prep["carry_pending"]):
-            new_pending = pd.concat([new_pending, prep["carry_pending"]],
-                                    ignore_index=True)
-
+        n_pending = 0
         oldest_pending_age_ms = 0.0
-        if len(new_pending):
-            # stamp/restore first_seen_at: restored from the pre-batch
-            # snapshot for rows that were already pending (incl. redelivery
-            # round-trips, which drop the column on the Spark leg), stamped
-            # `now` for rows failing for the first time
-            if "first_seen_at" in new_pending.columns:
-                new_pending = new_pending.drop(columns=["first_seen_at"])
-            if prep["prev_seen"] is not None:
-                new_pending = new_pending.merge(prep["prev_seen"], on=IDENTITY, how="left")
-                new_pending["first_seen_at"] = new_pending.pop("_prev_seen").fillna(now)
-            else:
-                new_pending["first_seen_at"] = now
+        new_pending = pa.concat_tables(parts) if parts else None
+        if new_pending is not None and new_pending.num_rows:
+            n_pending = new_pending.num_rows
+            seen = pc.fill_null(new_pending["first_seen_at"], now)
+            new_pending = new_pending.set_column(
+                new_pending.schema.get_field_index("first_seen_at"),
+                "first_seen_at", seen)
             oldest_pending_age_ms = max(
-                0.0, (time.time() - float(new_pending["first_seen_at"].min())) * 1000.0
-            )
+                0.0, (time.time() - pc.min(seen).as_py()) * 1000.0)
             _write_parquet(self.pending_path, new_pending)
         elif os.path.exists(self.pending_path):
             os.remove(self.pending_path)
@@ -694,8 +735,7 @@ class DeliveryEngine:
         if len(discarded):
             _write_parquet(
                 os.path.join(self.discarded_dir, f"batch-{batch_id}-{uuid.uuid4().hex}.parquet"),
-                discarded[delivery_cols + ["deliver_count"]].assign(error=discarded["error"].values),
-            )
+                discarded, _plus(prep["row_schema"], error=pa.string()))
 
         # trace events (trace.ex: Trace.info/error per delivery attempt;
         # batch-granular here — the summary the console aggregates)
@@ -736,7 +776,7 @@ class DeliveryEngine:
             "blocked": n_blocked,
             "deferred": n_deferred,
             "discarded": int(len(discarded)),
-            "pending": int(len(new_pending)),
+            "pending": n_pending,
             "shed": prep["shed"],
             "spilled": prep["spilled"],
             "reingested": prep["reingested"],
@@ -755,7 +795,7 @@ def _gkey(r):
 
 def deliver_partition(batches, *, batch_id: int, sink_type: str,
                       sink_config: dict, batch_cols: tuple, batch_size: int,
-                      batch_bytes: int | None, delivery_cols: list,
+                      batch_bytes: int | None, fail_schema: pa.Schema,
                       ledger_dir: str, fail_dir: str, ring_size: int,
                       ledger: frozenset, blocked: frozenset):
     """The delivery task body (mapInPandas over the arranged frame) and
@@ -765,9 +805,9 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
     ``blocked``; block it if its group's chunk failed earlier in this
     task; otherwise send it in its batch key's chunk.  The task appends
     delivered identities to the ledger dir and failed/blocked/deferred
-    rows (payload included) to the failures dir, and yields only
-    bounded summary rows.  Task-retry double-writes are resolved on
-    read (dedup by identity)."""
+    rows (payload included, in ``fail_schema``) to the failures dir, and
+    yields only bounded summary rows.  Task-retry double-writes are
+    resolved on read (dedup by identity)."""
     sink = create_sink(sink_type, sink_config)
     sink.open()
     status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
@@ -802,16 +842,12 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
             )
         if len(failed):
             fail_rows = failed.merge(
-                payload_pdf[delivery_cols + ["deliver_count"]].drop(
-                    columns=["group_id"]
-                ),
+                payload_pdf.drop(columns=["group_id"]),
                 on=["commit_lsn", "commit_idx", "idempotency_key", "deliver_count"],
                 how="left",
             )
-            _write_parquet(
-                os.path.join(fail_dir, f"task-{task_tag}.parquet"),
-                fail_rows[delivery_cols + ["deliver_count", "status", "error"]],
-            )
+            _write_parquet(os.path.join(fail_dir, f"task-{task_tag}.parquet"),
+                           fail_rows, fail_schema)
         counts = status_pdf.groupby("status").size()
         parts = [pd.DataFrame({
             "kind": "agg", "status": counts.index, "n": counts.values,

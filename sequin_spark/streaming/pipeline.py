@@ -277,21 +277,3 @@ class ConsumerPipeline:
             .trigger(processingTime=f"{int(trigger_seconds * 1000)} milliseconds")
             .start()
         )
-
-
-def kafka_writer(compiled: DataFrame, bootstrap_servers: str, checkpoint_dir: str):
-    """Native Kafka sink path: Spark routes by the `topic` column
-    (per-row dynamic topics — the reference's kafka routing), key/value
-    from the pipeline output. Requires the spark-sql-kafka package at
-    runtime; this builds the plan.
-    """
-    return (
-        compiled.select(
-            F.col("topic"),
-            F.col("key").cast("binary").alias("key"),
-            F.col("value").cast("binary").alias("value"),
-        )
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint_dir)
-    )

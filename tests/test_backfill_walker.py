@@ -224,3 +224,23 @@ def test_backfill_job_writes_each_page_as_its_range(spark):
     flat = [k for p in pages for k in p]
     assert len(pages) >= 3 and all(pages)
     assert flat == sorted((i % 7, i) for i in range(50))
+
+
+def test_backfill_job_counts_rows_from_footers(spark, tmp_path):
+    """``BackfillJob`` sizes ``rows_initial_count`` from the parquet
+    footers of the table's files, as ``run_backfill`` does: creating a
+    job over a 12-file table runs no Spark job."""
+    from sequin_spark.plans.backfill_api import BackfillJob
+
+    path = str(tmp_path / "t12")
+    spark.range(120).repartition(12).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "bf-create-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "backfill create")
+    try:
+        job = BackfillJob("sink", "public.t", df, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert job.to_external()["rows_initial_count"] == 120
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

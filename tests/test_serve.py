@@ -41,6 +41,27 @@ def test_serve_once_applies_and_drains(spark, sf_dir, tmp_path):
     assert _count(out_dir) == 60
 
 
+def test_serve_once_boots_on_empty_events_dir(spark, tmp_path):
+    """A fresh deploy before the first WAL flush: the events directory
+    is empty, and serve opens it with the fixed event schema."""
+    src = tmp_path / "events"
+    src.mkdir()
+    out_dir = tmp_path / "delivered"
+    cfg = tmp_path / "sequin.yaml"
+    cfg.write_text(
+        "consumers:\n"
+        "  - name: orders-log\n"
+        "    sink_type: file_log\n"
+        f"    sink_config: {{path: \"{out_dir}\"}}\n"
+    )
+    out = io.StringIO()
+    rc = main(["serve", "--config", str(cfg), "--events", str(src),
+               "--state-dir", str(tmp_path / "state"), "--once"], out=out)
+    assert rc == 0
+    assert "orders-log" in out.getvalue()
+    assert _count(out_dir) == 0
+
+
 def test_serve_once_with_rocksdb_state(spark, sf_dir, tmp_path):
     """--rocksdb-state boots the engine with the disk-backed state
     store and delivers identically; the provider conf is restored so

@@ -241,9 +241,9 @@ def test_structured_streaming_end_to_end(spark, sf_dir, tmp_path):
     """File CDC source → pipeline → noop sink as a real streaming query."""
     src_dir = str(tmp_path / "events")
     eventize_orders(spark, sf_dir).limit(100).write.parquet(src_dir)
-    from sequin_spark.sources.cdc_log import stream_cdc_log
+    from sequin_spark.schema import EVENT_SCHEMA
 
-    stream = stream_cdc_log(spark, src_dir)
+    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
     assert stream.isStreaming
     spec = ConsumerSpec(name="s", sink_type="benchmark")
     pipe = ConsumerPipeline(spec, state_dir=str(tmp_path / "state"))

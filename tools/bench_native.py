@@ -2,15 +2,16 @@
 
 The Python delivery engine (foreachBatch: Arrow hop + ledger +
 checkpoint-commit-is-ack) has a measured ~0.65-0.7 s micro-batch floor
-(tools/bench_lowlat.py, SCALE.md).  The repo also has a pure-JVM path —
-``streaming/pipeline.py:kafka_writer`` — where the compiled operator
-chain goes straight into a native writeStream sink with no Python in
-the hot loop.  This tool measures THAT path's floor.
+(tools/bench_lowlat.py, SCALE.md).  A pure-JVM path would send the
+compiled operator chain straight into a native writeStream sink with no
+Python in the hot loop (a Kafka writeStream, which needs the
+spark-sql-kafka package; the engine does not ship one).  This tool
+measures THAT path's floor.
 
 Honesty note on the sink: the sandbox has no spark-sql-kafka connector
 jar (and no network to fetch one), so the terminal Kafka socket write
 cannot run here.  The measured sink is Spark's native streaming `noop`
-— the chain is byte-identical up to and including the kafka_writer
+— the chain is byte-identical up to and including the Kafka-writer
 projection (topic / key-as-binary / value-as-binary), so the numbers
 isolate the ENGINE-side floor of the native path; a real broker adds
 its produce round-trip on top.
@@ -60,7 +61,7 @@ def run(seconds, rows_per_second, trigger_s, prefix):
     spec = ConsumerSpec(name=name, sink_type="kafka",
                         sink_config={{"topic": "bench"}})
     pipe = ConsumerPipeline(spec, state_dir=f"{{tmp}}/state")
-    # the kafka_writer projection, terminated in the native noop sink
+    # the Kafka-writer projection, terminated in the native noop sink
     compiled = pipe.compile(stream).select(
         F.col("topic"),
         F.col("key").cast("binary").alias("key"),
