@@ -9,10 +9,11 @@ terminal states are frozen) with progress counters
 rows_initial/processed/ingested (backfill.ex:39-41) rendered via
 Transforms.to_external (transforms.ex:513-533).
 
-The runner shares the §2.10 page walker with ``run_backfill``
-(sources/backfill.py walk_pages): the driver sees one (count,
-last_cursor) row per page, nothing is cached, and each page's events are
-one keyset-range scan ``(prev_cursor, cursor]`` handed to ``out_writer``.
+The runner walks §2.10 keyset pages (sources/backfill.py walk_pages):
+the driver sees one (count, last_cursor) row per page, nothing is
+cached, and each page's events are one keyset-range scan
+``(prev_cursor, cursor]`` handed to ``out_writer``.  (``run_backfill``
+needs no walk: one aggregate gives its whole-table bound.)
 Pause parks the loop between pages (the reference's TableReaderServer
 pauses at page boundaries too); cancel/complete stop it.
 """

@@ -134,19 +134,17 @@ class MessageBrowser:
             for _, row in ring.iterrows():
                 out.append(self._encode_ring_row(row, "delivered"))
         # discarded parquet (max-retry-exceeded / admin discard)
-        import os
+        import pyarrow.parquet as pq
 
-        d = self.engine.discarded_dir
-        if os.path.isdir(d):
-            import pyarrow.parquet as pq
+        from sequin_spark.streaming.delivery import state_files
 
-            for f in sorted(os.listdir(d)):
-                try:
-                    pdf = pq.read_table(os.path.join(d, f)).to_pandas()
-                except Exception:  # noqa: BLE001 — partial write
-                    continue
-                for _, row in pdf.iterrows():
-                    out.append(self._encode_ring_row(row, "discarded"))
+        for f in sorted(state_files(self.engine.discarded_dir)):
+            try:
+                pdf = pq.read_table(f).to_pandas()
+            except Exception:  # noqa: BLE001 — partial write
+                continue
+            for _, row in pdf.iterrows():
+                out.append(self._encode_ring_row(row, "discarded"))
         return out
 
     # -- API (message_controller.ex param contract) -------------------------

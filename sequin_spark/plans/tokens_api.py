@@ -44,9 +44,14 @@ def _hash(token: str) -> str:
 
 
 def gen_token() -> str:
-    """48 random bytes, url-safe base64, no padding (api_token.ex:43)."""
-    return base64.urlsafe_b64encode(
-        secrets.token_bytes(_RAND_BYTES)).decode().rstrip("=")
+    """48 random bytes, url-safe base64, no padding (api_token.ex:43),
+    redrawn while it starts with ``-`` (1 draw in 64), which a command
+    line (``--api-token <tok>``) would read as an option."""
+    while True:
+        tok = base64.urlsafe_b64encode(
+            secrets.token_bytes(_RAND_BYTES)).decode().rstrip("=")
+        if not tok.startswith("-"):
+            return tok
 
 
 @dataclass

@@ -1885,6 +1885,28 @@ def q_cdc_replica_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("price_x100").alias("final_price_x100"))
 
 
+def _stream_cache_built_here(cache: str) -> bool:
+    """A streaming query's ``.cache`` output is reusable only at the path
+    it was built at: its file-sink ``_spark_metadata`` log records
+    absolute file paths, so a moved or copied cache lists no files."""
+    import json
+    import os
+
+    try:
+        with open(os.path.join(cache, "meta.json")) as f:
+            return json.load(f).get("cache") == os.path.abspath(cache)
+    except (OSError, ValueError):
+        return False
+
+
+def _stream_cache_done(cache: str, batches: int) -> None:
+    import json
+    import os
+
+    with open(os.path.join(cache, "meta.json"), "w") as f:
+        json.dump({"batches": batches, "cache": os.path.abspath(cache)}, f)
+
+
 def q_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 audit history maintained by the STANDING stateful query
     (streaming/stateful.scd2_history_stream, r11 verdict task #2) —
@@ -1908,7 +1930,6 @@ def q_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_by`` hash aggregate.  Results persist under ``.cache/``
     keyed by the orders fingerprint AND the state-schema version
     (v2 — the flushed_seq field makes v1 checkpoints incompatible)."""
-    import json as _json
     import os
 
     from sequin_spark.queries_datapipe import _index_cache_path
@@ -1924,8 +1945,7 @@ def q_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache = _index_cache_path(sf_dir, "cdc_scd2_stream", "v2-flushmid",
                               src_table="orders")
     out_dir = os.path.join(cache, "history")
-    meta = os.path.join(cache, "meta.json")
-    if not os.path.exists(meta):
+    if not _stream_cache_built_here(cache):
         import shutil
 
         shutil.rmtree(cache, ignore_errors=True)
@@ -1957,8 +1977,7 @@ def q_cdc_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
             q.awaitTermination(600)
-        with open(meta, "w") as f:
-            _json.dump({"batches": len(feed)}, f)
+        _stream_cache_done(cache, len(feed))
     return scd2_collapse(
         spark.read.parquet(out_dir), pk_col="o_orderkey").select(
         "o_orderkey", "valid_from_seq", "price_x100", "valid_to_seq",
@@ -1984,7 +2003,6 @@ def q_cdc_scd2_lsn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch into applyInPandasWithState with O(1) state per live
     PK; results persist under ``.cache/`` keyed by the orders
     fingerprint and the state-schema version."""
-    import json as _json
     import os
 
     from sequin_spark.queries_datapipe import _index_cache_path
@@ -1998,8 +2016,7 @@ def q_cdc_scd2_lsn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache = _index_cache_path(sf_dir, "cdc_scd2_lsn", "v1",
                               src_table="orders")
     out_dir = os.path.join(cache, "history")
-    meta = os.path.join(cache, "meta.json")
-    if not os.path.exists(meta):
+    if not _stream_cache_built_here(cache):
         import shutil
 
         shutil.rmtree(cache, ignore_errors=True)
@@ -2050,8 +2067,7 @@ def q_cdc_scd2_lsn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .option("checkpointLocation", ckpt)
                  .trigger(availableNow=True).start())
             q.awaitTermination(600)
-        with open(meta, "w") as f:
-            _json.dump({"batches": len(feed)}, f)
+        _stream_cache_done(cache, len(feed))
     return scd2_collapse(
         spark.read.parquet(out_dir), pk_col="o_orderkey").select(
         "o_orderkey", "valid_from_commit_lsn", "valid_from_commit_idx",

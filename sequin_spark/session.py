@@ -3,6 +3,13 @@
 Local tests run on ``local[N]``; the same conf keys are what we'd set on a
 1000-executor cluster (AQE, skew-join handling, adaptive partition
 coalescing, broadcast threshold).
+
+Python workers run the engine's daemon (``sequin_spark.worker_daemon``),
+which keeps each worker's import caches between tasks unless the shipped
+files change.  The daemon is started as ``python -m`` by the JVM, so the
+package's parent directory goes on the workers' ``PYTHONPATH``: a driver
+that reaches the package only through ``sys.path`` still runs Python
+tasks.
 """
 
 from __future__ import annotations
@@ -10,6 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "sequin_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -39,6 +48,8 @@ def get_spark(app_name: str = "sequin_spark", shuffle_partitions: int | None = N
         .config("spark.executor.extraJavaOptions", "-XX:UseAVX=2")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.daemon.module", "sequin_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
 

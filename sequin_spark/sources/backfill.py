@@ -10,12 +10,13 @@ Reference protocol (SURVEY §2.10; lib/sequin/runtime/table_reader.ex):
    before the fence are dropped (CDC wins — message_handler.ex:130-148);
 3. snapshot rows enter the stream as ``action='read'`` events.
 
-Spark mapping: (1) splits in two — a page walk that only finds each
-page's last cursor (one pushed-down ``agg`` row per page), then the
-events as ONE keyset-range scan ``lo < cursor <= last`` with no sort and
-no limit; (2) is a left_anti join against the CDC keys at/below the
-fence LSN (broadcast — that key set is small), run once on the range;
-(3) is a union into the canonical stream.
+Spark mapping: (1) splits in two — the bound (one pushed-down ``agg``
+row: the whole table's last cursor for ``run_backfill``, each page's
+for ``walk_pages``), then the events as ONE keyset-range scan
+``lo < cursor <= last`` with no sort and no limit; (2) is a left_anti
+join against the CDC keys at/below the fence LSN (broadcast — that key
+set is small), run once on the range; (3) is a union into the canonical
+stream.
 """
 
 from __future__ import annotations
@@ -193,23 +194,21 @@ def run_backfill(
     cursor_cols: list[str] | None = None,
     cdc_events=None,
     fence_lsn: int = 0,
-    initial_page_size: int = 1000,
-    max_pages: int | None = None,
-    pk_prescan: bool = False,
     source_path: str | None = None,
 ):
-    """Full backfill protocol (§2.10): walk the snapshot's keyset pages
-    (``walk_pages``: AIMD sizing, progress counters, state machine), then
-    return (Backfill, events) — the `read` events of everything walked
-    as ONE keyset-range scan, fence-merged once against concurrent CDC
-    (None when the walk found no rows).  ``max_pages`` stops the walk
-    early; the backfill then stays ``active`` at its last cursor.
+    """Whole-table backfill (§2.10): return (Backfill, events) — the
+    `read` events of every row with a non-NULL cursor, as ONE
+    keyset-range scan up to the table's last cursor, fence-merged once
+    against concurrent CDC (None when the table has no such row).
 
-    ``pk_prescan=True`` is fetch_batch_pks parity (table_reader.ex:
-    161-203 with select_only_pk_and_cursor_columns): the walk scans only
-    the PK+cursor columns (column pruning reaches parquet's ReadSchema /
-    JDBC's SELECT list), so wide tables page ~10-100× cheaper; the full
-    rows are read once, by the range scan.
+    The bound (row count and last cursor) is one
+    ``agg(count, max(struct(cursor)))`` over the NULL-dropped cursor
+    columns, so it reads only those columns, as the reference's PK
+    prescan does (table_reader.ex:161-203).  There is no page walk:
+    the reference pages because it holds each page in memory; here the
+    events are one range scan either way.  ``BackfillJob`` walks pages
+    (``walk_pages``) because its page boundaries carry pause, cancel
+    and throttle.
     """
     from sequin_spark.sources.fast_count import count_or_estimate
 
@@ -218,17 +217,15 @@ def run_backfill(
     # (table_reader.ex:333-360) — progress bars don't pay a scan
     bf = Backfill(table_name, cursor_cols,
                   rows_initial_count=count_or_estimate(df, source_path))
-    opt = PageSizeOptimizer(initial=initial_page_size)
-    keys = df.select(*dict.fromkeys([*cursor_cols, *pk_cols])) if pk_prescan else df
-    for n_pages, (n, cursor) in enumerate(walk_pages(keys, cursor_cols, opt), 1):
-        bf.rows_processed_count += n
-        bf.cursor = cursor
-        if n_pages == max_pages:
-            break
-    else:
-        bf.transition("completed")
-    if bf.cursor is None:
+    bound = df.select(*cursor_cols).dropna().agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.struct(*[F.col(c) for c in cursor_cols])).alias("last_cursor"),
+    ).collect()[0]
+    bf.transition("completed")
+    if not bound["n"]:
         return bf, None
+    bf.rows_processed_count = int(bound["n"])
+    bf.cursor = [bound["last_cursor"][c] for c in cursor_cols]
     events = backfill_snapshot(
         keyset_range(df, cursor_cols, None, bf.cursor), table_name, pk_cols)
     if cdc_events is None:

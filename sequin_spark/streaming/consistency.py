@@ -15,7 +15,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sequin_spark.streaming.delivery import IDENTITY, DeliveryEngine
+from sequin_spark.streaming.delivery import IDENTITY, DeliveryEngine, state_files
 
 
 def verify_consistency(spark: SparkSession, source_events: DataFrame, engine: DeliveryEngine) -> dict:
@@ -47,7 +47,7 @@ def verify_consistency(spark: SparkSession, source_events: DataFrame, engine: De
         src_rest = src_rest.join(F.broadcast(pending_df), IDENTITY, "left_anti")
 
     discarded = 0
-    if os.path.isdir(engine.discarded_dir) and os.listdir(engine.discarded_dir):
+    if state_files(engine.discarded_dir):
         disc = spark.read.parquet(engine.discarded_dir).select(*IDENTITY).dropDuplicates()
         discarded = src_rest.join(F.broadcast(disc), IDENTITY, "left_semi").count()
         src_rest = src_rest.join(F.broadcast(disc), IDENTITY, "left_anti")

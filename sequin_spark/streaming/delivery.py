@@ -111,12 +111,29 @@ def _hashable(v):
 
 def _write_parquet(path: str, data: "pd.DataFrame | pa.Table",
                    schema: pa.Schema | None = None) -> None:
-    """Write a state file; a frame is converted in ``schema`` when one
-    is given (columns outside it are dropped), else by inference."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    """Write a state file crash-safely: into ``.<name>.tmp`` in the same
+    directory, then ``os.replace`` onto ``path``, so a writer killed
+    mid-write leaves the previous file (or none) and a dot-named
+    leftover that every state reader skips.  A frame is converted in
+    ``schema`` when one is given (columns outside it are dropped), else
+    by inference."""
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
     if isinstance(data, pd.DataFrame):
         data = pa.Table.from_pandas(data, schema=schema, preserve_index=False)
-    pq.write_table(data, path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(data, tmp)
+    os.replace(tmp, path)
+
+
+def state_files(d: str) -> "list[str]":
+    """The files of state dir ``d`` a reader may read: not ``_``- or
+    ``.``-named (Spark's hidden-file rule, which also hides a partial
+    ``_write_parquet`` leftover)."""
+    if not os.path.isdir(d):
+        return []
+    return [os.path.join(d, f) for f in os.listdir(d)
+            if not f.startswith(("_", "."))]
 
 
 def _plus(schema: pa.Schema, **types) -> pa.Schema:
@@ -257,7 +274,7 @@ class DeliveryEngine:
         out = []
         for name in sorted(os.listdir(d)):
             p = os.path.join(d, name)
-            if name.startswith("_") or not os.path.isdir(p):
+            if name.startswith(("_", ".")) or not os.path.isdir(p):
                 continue
             parts = name.split("_")
             try:
@@ -329,8 +346,7 @@ class DeliveryEngine:
         return None if pending is None else pending.to_pandas()
 
     def read_ledger(self, spark: SparkSession) -> DataFrame | None:
-        if os.path.isdir(self.ledger_dir) and any(
-                not f.startswith("_") for f in os.listdir(self.ledger_dir)):
+        if state_files(self.ledger_dir):
             # explicit schema: the ledger layout is fixed (IDENTITY), and
             # schema inference costs a footer-read job.
             # recursiveFileLookup also reads ledger files that older
@@ -387,13 +403,7 @@ class DeliveryEngine:
     def _compact_ledger(self) -> None:
         """Merge small per-batch ledger files once they pile up — keeps
         the per-batch identity read O(1) files instead of O(batches)."""
-        if not os.path.isdir(self.ledger_dir):
-            return
-        files = [os.path.join(self.ledger_dir, f) for f in os.listdir(self.ledger_dir)]
-        if len(files) < self.ledger_compact_files:
-            return
-        files = [f for f in files if os.path.isfile(f)
-                 and not os.path.basename(f).startswith("_")]
+        files = [f for f in state_files(self.ledger_dir) if os.path.isfile(f)]
         if len(files) < self.ledger_compact_files:
             return
         merged = pa.concat_tables([pq.read_table(f) for f in files])
@@ -403,10 +413,8 @@ class DeliveryEngine:
                 pc.or_(pc.greater_equal(lsn, self._ledger_trim_lsn),
                        pc.equal(lsn, 0))
             )
-        tmp = os.path.join(self.ledger_dir, f"compact-{uuid.uuid4().hex}.parquet.tmp")
-        pq.write_table(merged, tmp)
-        final = tmp[: -len(".tmp")]
-        os.rename(tmp, final)
+        _write_parquet(os.path.join(
+            self.ledger_dir, f"compact-{uuid.uuid4().hex}.parquet"), merged)
         for f in files:
             os.remove(f)
 
@@ -459,10 +467,9 @@ class DeliveryEngine:
         redeliver escape hatch after fixing a broken sink.  Column types
         are the ones the files carry; the next batch's scan reads them
         in the batch's row schema."""
-        if not (os.path.isdir(self.discarded_dir) and os.listdir(self.discarded_dir)):
+        files = state_files(self.discarded_dir)
+        if not files:
             return 0
-        files = [os.path.join(self.discarded_dir, f)
-                 for f in os.listdir(self.discarded_dir)]
         disc = pa.concat_tables([pq.read_table(f) for f in files],
                                 promote_options="permissive")
         disc = disc.drop_columns([c for c in ("error", "not_visible_until")
@@ -690,10 +697,10 @@ class DeliveryEngine:
         parts = [] if prep["waiting"] is None else [prep["waiting"]]
         discarded = pd.DataFrame()
         failures = None
-        if os.path.isdir(fail_dir) and os.listdir(fail_dir):
+        fail_files = state_files(fail_dir)
+        if fail_files:
             failures = pd.concat(
-                [pq.read_table(os.path.join(fail_dir, f)).to_pandas()
-                 for f in os.listdir(fail_dir)],
+                [pq.read_table(f).to_pandas() for f in fail_files],
                 ignore_index=True,
             ).drop_duplicates(subset=IDENTITY, keep="first")  # task-retry double-writes
             bump = failures["status"] == "failed"
@@ -713,9 +720,7 @@ class DeliveryEngine:
                      else retry.assign(first_seen_at=now))
             parts.insert(0, pa.Table.from_pandas(
                 retry, schema=prep["pending_schema"], preserve_index=False))
-            for f in os.listdir(fail_dir):
-                os.remove(os.path.join(fail_dir, f))
-            os.rmdir(fail_dir)
+        shutil.rmtree(fail_dir, ignore_errors=True)
 
         n_pending = 0
         oldest_pending_age_ms = 0.0

@@ -220,3 +220,22 @@ def test_scd2_tombstone_state_eviction(spark, tmp_path):
         assert len(got) == 3
     finally:
         q.stop()
+
+
+def test_scd2_stream_cache_reads_same_rows_after_move(spark, sf_dir,
+                                                      tmp_path, monkeypatch):
+    """A ``.cache`` streaming output moved to another directory (a
+    copied tree) reads the same rows: its file-sink log holds absolute
+    paths, so the query rebuilds it where it now lives."""
+    from sequin_spark import queries, queries_datapipe
+
+    root = {"dir": tmp_path / "a"}
+    monkeypatch.setattr(
+        queries_datapipe, "_index_cache_path",
+        lambda *a, **kw: str(root["dir"] / "cdc_scd2_lsn"))
+    before = sorted(queries.q_cdc_scd2_lsn_stream(spark, sf_dir).collect())
+    assert before
+    os.rename(tmp_path / "a", tmp_path / "b")
+    root["dir"] = tmp_path / "b"
+    assert sorted(queries.q_cdc_scd2_lsn_stream(spark, sf_dir).collect()) \
+        == before

@@ -81,12 +81,12 @@ def test_webhook_retry_on_503(spark, sf_dir, tmp_path, http_server):
 
 
 def test_run_backfill_protocol(spark, sf_dir):
-    """Keyset pagination + fence merge + AIMD + progress counters."""
+    """Whole-table bound + fence merge + progress counters."""
     cust = load_table(spark, sf_dir, "customer")
     cdc = eventize_customer(spark, sf_dir)
     bf, events = run_backfill(
         spark, cust, "customer", ["c_custkey"],
-        cdc_events=cdc, fence_lsn=1_000_003, initial_page_size=40,
+        cdc_events=cdc, fence_lsn=1_000_003,
     )
     assert bf.state == "completed"
     assert bf.rows_initial_count == cust.count()
@@ -94,25 +94,31 @@ def test_run_backfill_protocol(spark, sf_dir):
     # CDC at/below fence (custkey <= 31) wins over snapshot
     assert bf.rows_ingested_count == cust.filter("c_custkey div 8 > 3").count()
     assert events.filter(F.col("action") != "read").count() == 0
-    # AIMD grew the page size on fast local pages
-    assert bf.rows_processed_count > 40
+    assert bf.cursor == [cust.agg(F.max("c_custkey")).first()[0]]
 
 
-def test_run_backfill_pk_prescan_equivalent(spark, sf_dir):
-    """fetch_batch_pks parity (table_reader.ex:161-203): PK+cursor-only
-    paging + semi-join full-row fetch yields the same events as the
-    direct full-row pages."""
+def test_run_backfill_bound_scans_only_cursor_columns(spark, sf_dir,
+                                                      monkeypatch):
+    """fetch_batch_pks parity (table_reader.ex:161-203): the bound reads
+    only the cursor columns (parquet ReadSchema), and the full rows are
+    read once, by the range scan."""
     cust = load_table(spark, sf_dir, "customer")
-    kwargs = dict(cdc_events=None, initial_page_size=40)
-    bf_a, ev_a = run_backfill(spark, cust, "customer", ["c_custkey"], **kwargs)
-    bf_b, ev_b = run_backfill(
-        spark, cust, "customer", ["c_custkey"], pk_prescan=True, **kwargs
-    )
-    assert bf_b.state == "completed"
-    assert bf_b.rows_processed_count == bf_a.rows_processed_count == cust.count()
-    a = {r["group_id"] for r in ev_a.select("group_id").collect()}
-    b = {r["group_id"] for r in ev_b.select("group_id").collect()}
-    assert a == b
+    plans = []
+    real = type(cust).agg
+
+    def agg(self, *exprs):
+        out = real(self, *exprs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(type(cust), "agg", agg)
+    bf, events = run_backfill(spark, cust, "customer", ["c_custkey"])
+    monkeypatch.undo()
+    assert bf.rows_processed_count == cust.count()
+    assert len(plans) == 1 and "ReadSchema: struct<c_custkey:" in plans[0]
+    assert "c_name" not in plans[0], plans[0]
+    assert {r["group_id"] for r in events.select("group_id").collect()} == {
+        str(r[0]) for r in cust.select("c_custkey").collect()}
 
 
 def test_backfill_state_machine():

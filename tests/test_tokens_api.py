@@ -153,6 +153,19 @@ def test_gen_token_shape():
         assert len(t) == 64 and "=" not in t
 
 
+def test_gen_token_never_starts_with_dash(monkeypatch):
+    """A draw whose first 6 bits are 62 (``-`` in url-safe base64) is
+    redrawn: ``sequin context add --api-token <tok>`` would read such a
+    token as an option."""
+    import secrets
+
+    draws = iter([b"\xf8" + b"\x00" * 47, b"\x04" * 48])
+    monkeypatch.setattr(secrets, "token_bytes", lambda n: next(draws))
+    tok = gen_token()
+    assert not tok.startswith("-")
+    assert tok == "BAQE" * 16
+
+
 def test_create_rejects_cross_account_body(monkeypatch):
     """ADVICE r9 (high): POST /api/tokens must derive the account from
     the AUTHENTICATING token (api_key_controller.ex uses
