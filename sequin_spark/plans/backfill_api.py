@@ -37,15 +37,6 @@ from sequin_spark.sources.backfill import (
 )
 from sequin_spark.sources.fast_count import count_or_estimate
 
-# backfill.ex:92-98 @state_transitions
-STATE_TRANSITIONS = {
-    "active": ("paused", "completed", "failed", "cancelled"),
-    "paused": ("active", "cancelled"),
-    "completed": (),
-    "failed": (),
-    "cancelled": (),
-}
-
 
 def _now() -> str:
     return datetime.now(timezone.utc).isoformat()
@@ -99,18 +90,10 @@ class BackfillJob:
             return self._bf.state
 
     def transition(self, new_state: str) -> None:
-        """Validated transition (backfill.ex:99-121); raises ValueError
-        with the reference's message shape on an illegal move."""
+        """``Backfill.transition`` under the job's lock, stamping the
+        job's timestamps."""
         with self._lock:
-            cur = self._bf.state
-            allowed = STATE_TRANSITIONS.get(cur, ())
-            if new_state not in allowed:
-                allowed_str = ", ".join(allowed) if allowed else "none"
-                raise ValueError(
-                    f"Invalid state transition from {cur} to {new_state}. "
-                    f"Valid transitions: {allowed_str}"
-                )
-            self._bf.state = new_state
+            self._bf.transition(new_state)
             self.updated_at = _now()
             if new_state == "cancelled":
                 self.canceled_at = self.updated_at

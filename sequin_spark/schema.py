@@ -70,13 +70,3 @@ def group_id_from_pks(record_pks: F.Column) -> F.Column:
     slot_message_store_state.ex:432-478).
     """
     return F.when(F.size(record_pks) > 0, F.array_join(record_pks, ":"))
-
-
-def with_identity_columns(df):
-    """Derive idempotency_key and group_id when absent."""
-    out = df
-    if "idempotency_key" not in df.columns:
-        out = out.withColumn("idempotency_key", idempotency_key(F.col("commit_lsn"), F.col("commit_idx")))
-    if "group_id" not in df.columns:
-        out = out.withColumn("group_id", group_id_from_pks(F.col("record_pks")))
-    return out

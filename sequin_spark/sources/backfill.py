@@ -161,12 +161,20 @@ def fence_merge(snapshot: DataFrame, cdc: DataFrame, fence_lsn: int) -> DataFram
     )
 
 
-BACKFILL_STATES = ("active", "paused", "completed", "cancelled", "failed")
+# backfill.ex:92-98 @state_transitions: the states and the moves
+# between them; terminal states are frozen
+STATE_TRANSITIONS = {
+    "active": ("paused", "completed", "failed", "cancelled"),
+    "paused": ("active", "cancelled"),
+    "completed": (),
+    "failed": (),
+    "cancelled": (),
+}
 
 
 class Backfill:
     """Backfill lifecycle + progress counters (backfill.ex:29-51,91-97):
-    state machine active→{paused,completed,cancelled,failed}, counters
+    the STATE_TRANSITIONS state machine, counters
     rows_initial/processed/ingested."""
 
     def __init__(self, table_name: str, cursor_cols: list[str], rows_initial_count: int = 0):
@@ -179,10 +187,13 @@ class Backfill:
         self.cursor: list | None = None
 
     def transition(self, new_state: str) -> None:
-        if new_state not in BACKFILL_STATES:
-            raise ValueError(f"unknown backfill state {new_state!r}")
-        if self.state in ("completed", "cancelled", "failed"):
-            raise ValueError(f"cannot leave terminal state {self.state!r}")
+        """Validated transition (backfill.ex:99-121); raises ValueError
+        with the reference's message shape on an illegal move."""
+        allowed = STATE_TRANSITIONS[self.state]
+        if new_state not in allowed:
+            raise ValueError(
+                f"Invalid state transition from {self.state} to {new_state}. "
+                f"Valid transitions: {', '.join(allowed) or 'none'}")
         self.state = new_state
 
 

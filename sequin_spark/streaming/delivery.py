@@ -21,19 +21,21 @@ Execution model, three steps per micro-batch (process_batch):
   Due retries re-enter as one scan of pending.parquet with an explicit
   schema and a pushed-down ``not_visible_until <= now`` filter; only
   the rows still backing off stay on the driver.
-- deliver (one mapInPandas job over deliver_partition): the one place
-  rows are skipped or held.  Each task writes its own ledger and
-  failures files and yields only BOUNDED summary rows, so nothing
-  O(batch-rows) crosses the driver.
+- deliver (one mapInArrow job over deliver_partition): the one place
+  rows are skipped or held.  The task loops over each Arrow frame's
+  rows as plain dicts, so a null stays None and a map reaches the sink
+  as a dict.  Each task writes its own ledger and failures files and
+  yields only BOUNDED summary rows, so nothing O(batch-rows) crosses
+  the driver.
 - finish (driver): ledger compaction and trim, acked ring, pending,
   discards and overflow reap.
 
 Every state file that holds rows (task failures, pending, discards) is
 written in one typed row schema, the Arrow form of the delivery rows'
 Spark schema, plus the file's own bookkeeping columns; the admin
-operations keep the schema of the files they read.  Types are never
-inferred from pandas, so a map-typed routing value (http_push
-``headers``) reads back as a map.
+operations keep the schema of the files they read.  The task writes its
+failures in its own input schema, which is that row schema, so a
+map-typed routing value (http_push ``headers``) reads back as a map.
 
 Scale note (100 TB): the ledger and pending-retry state are the only
 driver-coordinated pieces — on a real cluster state_dir is shared
@@ -46,6 +48,7 @@ at-least-once → exactly-once-effect contract.
 
 from __future__ import annotations
 
+import collections
 import functools
 import os
 import shutil
@@ -58,7 +61,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from sequin_spark.functions.routing import (
@@ -69,10 +72,17 @@ from sequin_spark.sinks.base import SinkBatch, create_sink
 # (status, n) counts; kind='ring' rows carry the task's last ≤ring_size
 # acked identities for the acknowledged-messages ring; each task ends
 # with one kind='task' row (n=1), so the driver counts delivery tasks.
-SUMMARY_SCHEMA = (
-    "kind string, status string, n long, commit_lsn long, commit_idx long, "
-    "idempotency_key string, group_id string, deliver_count int, acked_at double"
-)
+# The task builds Arrow batches in this schema; the job declares its
+# Spark form (from_arrow_schema).
+SUMMARY_SCHEMA = pa.schema([
+    ("kind", pa.string()), ("status", pa.string()), ("n", pa.int64()),
+    ("commit_lsn", pa.int64()), ("commit_idx", pa.int64()),
+    ("idempotency_key", pa.string()), ("group_id", pa.string()),
+    ("deliver_count", pa.int32()), ("acked_at", pa.float64())])
+# the values a summary row leaves unset (never null: finish folds the
+# summaries in pandas, where a null would make an int column float)
+_SUMMARY_ZERO = {"commit_lsn": 0, "commit_idx": 0, "idempotency_key": "",
+                 "group_id": "", "deliver_count": 0, "acked_at": 0.0}
 
 # Delivery-latency histogram buckets in microseconds (prometheus.ex:23-29
 # sequin_delivery_latency_us). Executor tasks observe each sink call and
@@ -89,6 +99,12 @@ LAT_INF = 2**62  # the +Inf bucket marker
 # key (table_reader.ex:405) — so dedup/ledger/status identity is the
 # triple, which degrades to pure cursor identity for CDC rows.
 IDENTITY = ["commit_lsn", "commit_idx", "idempotency_key"]
+# the ledger files hold identities only
+LEDGER_SCHEMA = pa.schema([("commit_lsn", pa.int64()),
+                           ("commit_idx", pa.int64()),
+                           ("idempotency_key", pa.string())])
+# what a kind='ring' summary row carries of a delivered row
+RING_COLS = IDENTITY + ["group_id", "deliver_count"]
 
 BACKOFF_MIN_S = 1.0
 BACKOFF_MAX_S = 180.0
@@ -101,12 +117,14 @@ def backoff_s(deliver_count: int, base_s: float = BACKOFF_MIN_S) -> float:
 
 def _hashable(v):
     """A batch-key value usable as a dict key: a map column (http_push
-    ``headers``) reaches the task as a dict or a list of pairs."""
-    if isinstance(v, dict):
-        v = sorted(v.items())
-    if isinstance(v, (list, tuple)):
-        return tuple(_hashable(x) for x in v)
-    return v
+    ``headers``) reaches the sink as a dict."""
+    return tuple(sorted(v.items())) if isinstance(v, dict) else v
+
+
+def _summary(rows: "list[dict]") -> pa.RecordBatch:
+    """Summary rows as one batch in SUMMARY_SCHEMA."""
+    return pa.RecordBatch.from_pylist([{**_SUMMARY_ZERO, **r} for r in rows],
+                                      schema=SUMMARY_SCHEMA)
 
 
 def _write_parquet(path: str, data: "pd.DataFrame | pa.Table",
@@ -192,10 +210,11 @@ class DeliveryEngine:
         self.partition_count = partition_count
         self.max_retry_count = max_retry_count
         self.routing_cols = tuple(routing_cols)
-        # the columns a row carries into the delivery task
-        self.delivery_cols = ["group_id", "commit_lsn", "commit_idx",
-                              "idempotency_key", "key", "value",
-                              *self.routing_cols]
+        # the columns a row carries into the delivery task, each once
+        # (a routing column may be one of them: redis_string ``key``)
+        self.delivery_cols = list(dict.fromkeys([
+            "group_id", "commit_lsn", "commit_idx", "idempotency_key",
+            "key", "value", *self.routing_cols]))
         # chunk-bounding subset of routing_cols: the reference's Broadway
         # batch_key (sink_pipeline.ex:371-430).  Per-message routing keys
         # (kafka message_key, kinesis partition_key, ...) must NOT close
@@ -353,7 +372,7 @@ class DeliveryEngine:
             # versions wrote into subdirectories (with an extra group_id
             # column the explicit schema drops), so they still dedupe
             return spark.read.schema(
-                "commit_lsn long, commit_idx long, idempotency_key string"
+                from_arrow_schema(LEDGER_SCHEMA)
             ).option("recursiveFileLookup", "true").parquet(self.ledger_dir)
         return None
 
@@ -518,14 +537,11 @@ class DeliveryEngine:
             deliver_partition, batch_id=batch_id,
             sink_type=self.sink_type, sink_config=dict(self.sink_config),
             batch_cols=self.batch_cols, batch_size=self.batch_size,
-            batch_bytes=self.batch_bytes,
-            fail_schema=_plus(prep["row_schema"], status=pa.string(),
-                              error=pa.string()),
-            ledger_dir=self.ledger_dir, fail_dir=self.failures_dir(batch_id),
-            ring_size=self.acked_ring_size,
+            batch_bytes=self.batch_bytes, ledger_dir=self.ledger_dir,
+            fail_dir=self.failures_dir(batch_id), ring_size=self.acked_ring_size,
             ledger=prep["ledger"], blocked=prep["blocked"])
-        summary_pdf = prep["arranged"].mapInPandas(
-            task, SUMMARY_SCHEMA).toPandas()
+        summary_pdf = prep["arranged"].mapInArrow(
+            task, from_arrow_schema(SUMMARY_SCHEMA)).toPandas()
         return self.finish(summary_pdf, prep, batch_id)
 
     def prepare(self, batch_df: DataFrame, batch_id: int) -> dict:
@@ -541,9 +557,9 @@ class DeliveryEngine:
         # group-hash repartition below. Duplicate identities are the same
         # event, so they share group_id and land in the same partition,
         # where the (group, lsn, idx, key) sort makes them ADJACENT; the
-        # deliver task drops them with a cross-frame carry. Equivalent to
-        # the identity-keyed dropDuplicates shuffle, one full exchange of
-        # the event stream cheaper per micro-batch.
+        # deliver task drops a row that repeats the previous one.
+        # Equivalent to the identity-keyed dropDuplicates shuffle, one
+        # full exchange of the event stream cheaper per micro-batch.
         new_rows = batch_df.select(
             *[F.col(c) for c in delivery_cols]
         ).withColumn("deliver_count", F.lit(0))
@@ -687,7 +703,7 @@ class DeliveryEngine:
             self._compact_ledger()
             ring_new = summary_pdf[summary_pdf["kind"] == "ring"].sort_values(
                 ["acked_at", "commit_lsn", "commit_idx", "idempotency_key"]
-            )[IDENTITY + ["group_id", "deliver_count", "acked_at"]]
+            )[RING_COLS + ["acked_at"]]
             self._update_ring(ring_new)
 
         # new pending: executor-spilled failed/blocked/deferred rows
@@ -793,30 +809,23 @@ class DeliveryEngine:
 
 
 # --- the delivery task (executor side) ------------------------------------
-def _gkey(r):
-    g = r["group_id"]
-    return None if (g is None or (isinstance(g, float) and pd.isna(g))) else g
-
-
 def deliver_partition(batches, *, batch_id: int, sink_type: str,
                       sink_config: dict, batch_cols: tuple, batch_size: int,
-                      batch_bytes: int | None, fail_schema: pa.Schema,
-                      ledger_dir: str, fail_dir: str, ring_size: int,
-                      ledger: frozenset, blocked: frozenset):
-    """The delivery task body (mapInPandas over the arranged frame) and
+                      batch_bytes: int | None, ledger_dir: str, fail_dir: str,
+                      ring_size: int, ledger: frozenset, blocked: frozenset):
+    """The delivery task body (mapInArrow over the arranged frame) and
     the one place rows are skipped or held.  Per row, in (group, lsn,
     idx) order: drop it if its identity is in ``ledger`` or repeats the
     previous row's; defer it (status 'deferred') if its group is in
     ``blocked``; block it if its group's chunk failed earlier in this
     task; otherwise send it in its batch key's chunk.  The task appends
     delivered identities to the ledger dir and failed/blocked/deferred
-    rows (payload included, in ``fail_schema``) to the failures dir, and
-    yields only bounded summary rows.  Task-retry double-writes are
-    resolved on read (dedup by identity)."""
+    rows (payload included, in the frame's schema plus ``status`` and
+    ``error``) to the failures dir, and yields only bounded summary
+    rows.  Task-retry double-writes are resolved on read (dedup by
+    identity)."""
     sink = create_sink(sink_type, sink_config)
     sink.open()
-    status_cols = ["commit_lsn", "commit_idx", "idempotency_key", "group_id",
-                   "status", "error", "deliver_count"]
     # per-task latency histogram: {success: [bucket counts..., +Inf]}
     lat_counts = {"true": [0] * (len(LAT_BUCKETS_US) + 1),
                   "false": [0] * (len(LAT_BUCKETS_US) + 1)}
@@ -832,81 +841,51 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
             lat_counts[key][-1] += 1
         lat_sum_us[key] += dur_us
 
-    def _finish(status_pdf: pd.DataFrame, payload_pdf: pd.DataFrame):
-        """Persist one frame's outcomes; return its summary frame.  A
+    def _finish(schema: pa.Schema, delivered: list, held: list):
+        """Persist one frame's outcomes; return its summary batch.  A
         task may see several Arrow frames — file names are per-frame
         unique."""
         task_tag = uuid.uuid4().hex
         t_now = time.time()
-        delivered = status_pdf[status_pdf["status"] == "delivered"]
-        failed = status_pdf[status_pdf["status"] != "delivered"]
-        if len(delivered):
+        if delivered:
             _write_parquet(
                 os.path.join(ledger_dir, f"batch-{batch_id}-{task_tag}.parquet"),
-                delivered[IDENTITY],
-            )
-        if len(failed):
-            fail_rows = failed.merge(
-                payload_pdf.drop(columns=["group_id"]),
-                on=["commit_lsn", "commit_idx", "idempotency_key", "deliver_count"],
-                how="left",
-            )
-            _write_parquet(os.path.join(fail_dir, f"task-{task_tag}.parquet"),
-                           fail_rows, fail_schema)
-        counts = status_pdf.groupby("status").size()
-        parts = [pd.DataFrame({
-            "kind": "agg", "status": counts.index, "n": counts.values,
-            "commit_lsn": 0, "commit_idx": 0, "idempotency_key": "",
-            "group_id": "", "deliver_count": 0, "acked_at": t_now,
-        })]
-        if len(delivered):
-            tail = delivered.tail(ring_size)
-            parts.append(pd.DataFrame({
-                "kind": "ring", "status": "delivered", "n": 1,
-                "commit_lsn": tail["commit_lsn"].values,
-                "commit_idx": tail["commit_idx"].values,
-                "idempotency_key": tail["idempotency_key"].values,
-                "group_id": tail["group_id"].values,
-                "deliver_count": tail["deliver_count"].astype("int64").values,
-                "acked_at": t_now,
-            }))
-        return pd.concat(parts, ignore_index=True)
+                pa.Table.from_pylist(delivered, schema=LEDGER_SCHEMA))
+        if held:
+            _write_parquet(
+                os.path.join(fail_dir, f"task-{task_tag}.parquet"),
+                pa.Table.from_pylist(held, schema=_plus(
+                    schema, status=pa.string(), error=pa.string())))
+        counts = collections.Counter(r["status"] for r in held)
+        if delivered:
+            counts["delivered"] = len(delivered)
+        return _summary(
+            [{"kind": "agg", "status": s, "n": n, "acked_at": t_now}
+             for s, n in counts.items()]
+            + [{**{c: r[c] for c in RING_COLS}, "kind": "ring",
+                "status": "delivered", "n": 1, "acked_at": t_now}
+               for r in delivered[-ring_size:]])
 
-    # cross-frame dedup carry: the tail identity of the previous Arrow
-    # frame (duplicates are sort-adjacent, so any dup that straddles a
-    # frame boundary equals the previous tail)
-    prev_tail = None
+    # dedup carry: the identity of the previous row, across frames too
+    # (duplicates are sort-adjacent, so a repeat equals the row before)
+    prev_id = None
     # cross-frame GROUP-BLOCKING carry (r11): a group whose chunk failed
     # earlier in this task must stay blocked for the rest of the task —
     # frames are an Arrow transport boundary, not an ordering boundary
     # (a per-frame reset was an order violation, caught by the chaos
     # sweep under a 10-row maxRecordsPerBatch).
     failed_groups: set = set()
-    for pdf in batches:
-        if not len(pdf):
+    for rb in batches:
+        if not rb.num_rows:
             continue
-        dup = pdf.duplicated(subset=IDENTITY, keep="first")
-        if prev_tail is not None:
-            dup |= (
-                (pdf["commit_lsn"] == prev_tail[0])
-                & (pdf["commit_idx"] == prev_tail[1])
-                & (pdf["idempotency_key"] == prev_tail[2])
-            )
-        last = pdf.iloc[-1]
-        prev_tail = (last["commit_lsn"], last["commit_idx"],
-                     last["idempotency_key"])
-        if ledger:
-            dup |= pd.Series([k in ledger for k in zip(
-                *(pdf[c].tolist() for c in IDENTITY))], index=pdf.index)
-        pdf = pdf[~dup]
-        if not len(pdf):
-            continue
-        statuses = []
+        # a map column (http_push headers) reaches the sink as a dict
+        maps = [f.name for f in rb.schema if pa.types.is_map(f.type)]
+        delivered: list = []
+        held: list = []  # failed, blocked and deferred rows
 
-        def mark(r, status, err=""):
-            statuses.append((r["commit_lsn"], r["commit_idx"],
-                             r["idempotency_key"], _gkey(r), status, err,
-                             int(r["deliver_count"])))
+        def hold(r, status, err):
+            r["status"], r["error"] = status, err
+            held.append(r)
 
         def flush(chunk):
             if not chunk:
@@ -922,15 +901,14 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
             try:
                 sink.deliver(SinkBatch(routing=routing, rows=chunk))
                 _observe(True, int((time.perf_counter() - t0) * 1e6))
-                for r in chunk:
-                    mark(r, "delivered")
+                delivered.extend(chunk)
             except Exception as e:  # noqa: BLE001
                 _observe(False, int((time.perf_counter() - t0) * 1e6))
                 err = str(e)[:500]
                 for r in chunk:
-                    mark(r, "failed", err)
-                    if _gkey(r) is not None:
-                        failed_groups.add(_gkey(r))
+                    hold(r, "failed", err)
+                    if r["group_id"] is not None:
+                        failed_groups.add(r["group_id"])
 
         # Rows arrive sorted (group_id, lsn, idx). Each BATCH-key value
         # keeps one open chunk that spans groups — the reference's
@@ -944,12 +922,19 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
         # batch-key value → [rows, encoded bytes]
         buffers: dict = {}
         last_group = last_key = None
-        for r in pdf.to_dict("records"):
-            gk = _gkey(r)
+        for r in rb.to_pylist():
+            ident = (r["commit_lsn"], r["commit_idx"], r["idempotency_key"])
+            dup, prev_id = ident == prev_id or ident in ledger, ident
+            if dup:
+                continue
+            for c in maps:
+                if r[c] is not None:
+                    r[c] = dict(r[c])
+            gk = r["group_id"]
             # behind a backing-off pending head: never attempted, the
             # row rides in pending until the head resolves
             if gk in blocked:
-                mark(r, "deferred", "group blocked (backoff head)")
+                hold(r, "deferred", "group blocked (backoff head)")
                 continue
             key = tuple(_hashable(r.get(c)) for c in batch_cols)
             # a group's unsent rows sit in one buffer: before its next
@@ -975,7 +960,7 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
             # check AFTER flushing — the group's head may have just
             # failed in the chunk ahead of this row
             if gk is not None and gk in failed_groups:
-                mark(r, "blocked", "group blocked")
+                hold(r, "blocked", "group blocked")
                 continue
             if buf is None:
                 buf = buffers[key] = [[], 0]
@@ -984,23 +969,15 @@ def deliver_partition(batches, *, batch_id: int, sink_type: str,
             last_group, last_key = gk, key
         for chunk, _ in buffers.values():
             flush(chunk)
-        yield _finish(pd.DataFrame(statuses, columns=status_cols), pdf)
+        yield _finish(rb.schema, delivered, held)
     # the task's closing summary: its task row + latency histogram
-    end_rows = [("task", "", 1, 0)]
-    for success in ("true", "false"):
-        counts = lat_counts[success]
+    end = [{"kind": "task", "status": "", "n": 1}]
+    for success, counts in lat_counts.items():
         if not any(counts):
             continue
-        for le, c in zip((*LAT_BUCKETS_US, LAT_INF), counts):
-            if c:
-                end_rows.append(("lat", success, c, le))
-        end_rows.append(("lat_agg", success, sum(counts), lat_sum_us[success]))
-    yield pd.DataFrame({
-        "kind": [r[0] for r in end_rows],
-        "status": [r[1] for r in end_rows],
-        "n": [r[2] for r in end_rows],
-        "commit_lsn": [r[3] for r in end_rows],
-        "commit_idx": 0, "idempotency_key": "", "group_id": "",
-        "deliver_count": 0, "acked_at": 0.0,
-    })
+        end += [{"kind": "lat", "status": success, "n": c, "commit_lsn": le}
+                for le, c in zip((*LAT_BUCKETS_US, LAT_INF), counts) if c]
+        end.append({"kind": "lat_agg", "status": success, "n": sum(counts),
+                    "commit_lsn": lat_sum_us[success]})
+    yield _summary(end)
     sink.close()

@@ -175,8 +175,11 @@ class ConsumerPipeline:
             k: compile_expr(v)
             for k, v in (spec.routing_overrides or {}).items()}}
         df = route(df, spec.routing_schema(), overrides)
-        key = F.col("message_key") if "message_key" in df.columns else F.col("group_id")
-        df = df.withColumn("key", key)
+        # the delivery key, unless routing defines ``key`` itself
+        # (redis_string): then the routed value is the key
+        if "key" not in spec.routing_keys():
+            key = F.col("message_key") if "message_key" in df.columns else F.col("group_id")
+            df = df.withColumn("key", key)
         return df
 
     def _replica_frame(self, df: DataFrame) -> DataFrame:
